@@ -102,10 +102,15 @@ def test_optimization_final_claims_match_bench_detail():
     """The r17 verdict's item 1: closing-bench prose must be asserted
     against the committed artifact, not trusted. The optimization
     round's FINAL line follows the fixed format
-      FINAL (committed BENCH_DETAIL.json): total N s / N queries /
+      FINAL (committed BENCH_DETAIL_rNN.json): total N s / N queries /
       N failed; N flagged-resolved reruns; load_1m max N.
-    Every number is checked against BENCH_DETAIL.json. Skips while the
-    round is still open (no FINAL line yet)."""
+    A closing round copies the closing BENCH_DETAIL.json to
+    BENCH_DETAIL_rNN.json in the closing commit, and the FINAL line of
+    OPTIMIZATION_rNN.md cites that copy. Every bench run rewrites the
+    rolling BENCH_DETAIL.json, so a FINAL line that cites it, another
+    round's copy, or a file the repo does not hold fails here. Every
+    number is checked against the frozen copy. Skips only while the
+    round is still open (no FINAL (committed ...) line yet)."""
     import json
 
     doc = _latest_optimization_doc()
@@ -113,15 +118,34 @@ def test_optimization_final_claims_match_bench_detail():
         pytest.skip("no OPTIMIZATION_r*.md")
     with open(doc) as fh:
         text = fh.read()
+    cited = re.search(r"FINAL \(committed ([^)]*)\):", text)
+    if not cited:
+        pytest.skip("optimization round not closed (no FINAL line yet)")
+    rnd = re.fullmatch(r"OPTIMIZATION_r(\d+)\.md", os.path.basename(doc))
+    frozen = f"BENCH_DETAIL_r{rnd.group(1)}.json"
+    assert cited.group(1) == frozen, (
+        f"{os.path.basename(doc)} FINAL line cites {cited.group(1)!r}; "
+        f"cite the frozen per-round copy {frozen} (copy the closing "
+        "BENCH_DETAIL.json to it in the closing commit) — the rolling "
+        "BENCH_DETAIL.json is rewritten by every bench run"
+    )
+    artifact = os.path.join(REPO, frozen)
+    assert os.path.isfile(artifact), (
+        f"FINAL line cites {frozen}, which is not in the repo — commit "
+        "the frozen per-round copy of the closing BENCH_DETAIL.json"
+    )
     m = re.search(
-        r"FINAL \(committed BENCH_DETAIL\.json\): total ([\d.]+) s / "
+        r"FINAL \(committed " + re.escape(frozen) + r"\): total ([\d.]+) s / "
         r"(\d+) queries / (\d+) failed; (\d+) flagged-resolved reruns; "
         r"load_1m max ([\d.]+)",
         text,
     )
-    if not m:
-        pytest.skip("optimization round not closed (no FINAL line yet)")
-    with open(os.path.join(REPO, "BENCH_DETAIL.json")) as fh:
+    assert m, (
+        f"the FINAL line in {os.path.basename(doc)} does not follow the "
+        "fixed format 'FINAL (committed BENCH_DETAIL_rNN.json): total N s "
+        "/ N queries / N failed; N flagged-resolved reruns; load_1m max N'"
+    )
+    with open(artifact) as fh:
         art = json.load(fh)
     assert float(m.group(1)) == round(art["total_sec"], 1), (
         f"FINAL total {m.group(1)} != artifact {art['total_sec']}"
