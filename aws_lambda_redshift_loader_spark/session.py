@@ -20,8 +20,11 @@ Scale notes (100 TB / 1000-executor target):
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+_T = TypeVar("_T")
 
 TABLES = (
     "region",
@@ -133,6 +136,32 @@ def release_persisted() -> int:
         except Exception:
             pass  # session may be gone; releasing is best-effort
     return n
+
+
+def run_concurrently(
+    spark: SparkSession, thunks: list[Callable[[], _T]], max_workers: int
+) -> list[_T]:
+    """Run driver-side thunks that each submit Spark jobs on a small
+    thread pool; return their results in submission order, re-raising
+    the first failure (by submission order) after every thunk ended.
+
+    Each thunk is wrapped on its own with
+    ``inheritable_thread_target(spark)``, which clones the caller's
+    local properties (job group, scheduler pool, tags) at wrap time.
+    Sharing one wrapped function would hand every thread the SAME
+    ``Properties`` object, so concurrent writes would overwrite each
+    other's ``spark.sql.execution.id``. Inheriting the job group is what
+    lets ``cancelJobGroup`` / ``StreamingQuery.stop()`` reach the pool's
+    jobs. A single thunk runs inline."""
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=min(max_workers, len(thunks))) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+        return [f.result() for f in futures]
 
 
 def normalize_nanos(df: DataFrame) -> DataFrame:

@@ -57,6 +57,16 @@ class StreamIngest:
         self.status_dir = status_dir
         if config.data_format.upper() not in ("CSV", "JSON", "AVRO", "PARQUET", "ORC"):
             raise ValueError(f"unsupported data format {config.data_format}")
+        if config.batch_size and config.batch_size_bytes:
+            # Spark's file source refuses maxFilesPerTrigger together with
+            # maxBytesPerTrigger, and would only say so at the first
+            # trigger (STREAM_FAILED). Refuse the pair here instead.
+            raise ValueError(
+                f"prefix {config.s3_prefix}: batch_size and batch_size_bytes "
+                "cannot both be set for a stream (the file source takes "
+                "maxFilesPerTrigger or maxBytesPerTrigger, not both); "
+                "set one of them"
+            )
 
     def _reader(self):
         cfg = self.config

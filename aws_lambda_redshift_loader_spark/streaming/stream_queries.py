@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import dec
 from ..plans.registry import register
-from ..session import defer_unpersist, normalize_nanos, tune
+from ..session import defer_unpersist, normalize_nanos, run_concurrently, tune
 
 _COUNTER = itertools.count()
 
@@ -1474,7 +1474,7 @@ def ingest_neardup_epoch(
 # exponents measure full builds.
 _DOCSTREAM_MEMO: dict[tuple[str, str], dict[str, object]] = {}
 
-# 2-3 concurrent jobs fill each other's scheduling tails without
+# 4 concurrent store jobs fill each other's scheduling tails without
 # fighting for executor cores; the neardup+CC chain (the long pole) is
 # submitted first so FIFO keeps it resourced (guide §2.6).
 DOC_STREAM_POOL = 4
@@ -1490,8 +1490,6 @@ def _ensure_doc_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
     counters, token counts, value counts) — one stream, one trigger
     sequence, all stores advanced per trigger. Returns the store-path
     map; see the block comment for the fusion/identity argument."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..operators import dedup as _dedup
     from ..operators.dedup import _doc_features
 
@@ -1578,10 +1576,9 @@ def _ensure_doc_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
             lambda: ingest_token_counts_epoch(spark, b2, epoch_id, tok_store),
             lambda: ingest_valcount_epoch(spark, b2, epoch_id, val_store),
         ]
-        with ThreadPoolExecutor(max_workers=DOC_STREAM_POOL) as pool:
-            futures = [pool.submit(t) for t in tasks]
-            for f in futures:
-                f.result()
+        # Pool threads inherit the epoch's job group, so q.stop()
+        # cancels in-flight sibling store jobs too.
+        run_concurrently(spark, tasks, DOC_STREAM_POOL)
 
     with _stream_shuffle(spark):
         q = (

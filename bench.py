@@ -76,8 +76,10 @@ def _cpu_ticks() -> list[int]:
 
 
 def _cpu_delta_pct(before: list[int], after: list[int]) -> dict:
-    """steal%/busy% of total cpu ticks elapsed between two snapshots."""
-    if not before or not after or len(after) < 8:
+    """steal%/busy% of total cpu ticks elapsed between two snapshots.
+    Both snapshots need the steal field (index 7); a short or missing
+    one (a failed /proc/stat read, an old kernel) yields {}."""
+    if len(before) < 8 or len(after) < 8:
         return {}
     d = [a - b for a, b in zip(after, before)]
     total = sum(d)

@@ -22,3 +22,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture()
+def jobs_in_group(spark):
+    """``jobs_in_group(group, fn)`` runs ``fn()`` under
+    ``setJobGroup(group)`` and returns ``(fn's result, number of Spark
+    jobs the group holds)``, counted from the status tracker once the
+    listener bus has drained. Jobs started from other threads count only
+    if those threads inherited the group."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -47,3 +47,18 @@ def test_substitutable_memo_rules():
     assert not substitutable(["cc_build", "pairs_build"])
     assert not substitutable(["nb_scorer_build", "surprisal_hit"])
     assert not substitutable(["inc_ingest_build", "doc_split_build"])
+
+
+def test_cpu_delta_pct_guards_both_snapshots():
+    """steal/busy need field 7 (steal) in BOTH /proc/stat snapshots; a
+    short one on either side, or no elapsed ticks, yields no figures
+    instead of an IndexError."""
+    from bench import _cpu_delta_pct
+
+    full = [100, 0, 50, 800, 10, 0, 0, 40, 0, 0]
+    later = [150, 0, 80, 900, 10, 0, 0, 60, 0, 0]  # +200 ticks, 20 steal, 100 idle
+    assert _cpu_delta_pct(full, later) == {"steal_pct": 10.0, "busy_pct": 40.0}
+    assert _cpu_delta_pct(full[:4], later) == {}  # short before
+    assert _cpu_delta_pct(full, later[:4]) == {}  # short after
+    assert _cpu_delta_pct([], later) == {}
+    assert _cpu_delta_pct(full, list(full)) == {}  # zero total

@@ -108,6 +108,62 @@ def test_jdbc_sink_column_list_projection(spark, derby_url):
     assert [tuple(r) for r in out.collect()] == [("a", 1)]
 
 
+def test_jdbc_sink_existing_target_costs_one_spark_job(spark, derby_url, jobs_in_group):
+    """The target-create append runs only when the table is missing: a
+    load into an existing table starts exactly one Spark job (the
+    parallel stage append); the existence check is a driver-side query."""
+    df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])
+    sink = ClusterSink(target_table="target_jobs", jdbc_url=derby_url)
+    first, _ = jobs_in_group("jdbc_first_load", lambda: write_to_sink(df, sink))
+    assert first.status == "loaded", first.error
+    second, n_jobs = jobs_in_group("jdbc_second_load", lambda: write_to_sink(df, sink))
+    assert second.status == "loaded", second.error
+    assert n_jobs == 1
+    got = sorted(tuple(r) for r in _read_table(spark, derby_url, "target_jobs").collect())
+    assert got == [(1, "a"), (1, "a"), (2, "b"), (2, "b")]
+
+
+def test_jdbc_sink_creates_missing_target_with_frame_schema(spark, derby_url):
+    df = spark.createDataFrame([(7, "x", 1.5)], "id BIGINT, val STRING, score DOUBLE")
+    sink = ClusterSink(target_table="target_fresh", jdbc_url=derby_url)
+    assert write_to_sink(df, sink).status == "loaded"
+    out = _read_table(spark, derby_url, "target_fresh")
+    assert out.columns == ["id", "val", "score"]
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "bigint", "string", "double"
+    ]
+    assert [tuple(r) for r in out.collect()] == [(7, "x", 1.5)]
+
+
+def test_fan_out_one_failing_sink_among_concurrent_writers(spark, derby_url, tmp_path):
+    """A5 under concurrency: the JDBC sink's swap fails (rolled back,
+    target left empty) while two path sinks write beside it. The batch
+    folds to ok=False, the failure is reported on its own sink, and the
+    other sinks keep their rows."""
+    from aws_lambda_redshift_loader_spark.streaming.sinks import fan_out
+
+    df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["id", "val"])
+    sinks = [
+        ClusterSink(target_table="fan_p1", path=str(tmp_path / "w1")),
+        ClusterSink(
+            target_table="fan_bad",
+            jdbc_url=derby_url,
+            postsql="INSERT INTO no_such_table VALUES (1)",
+        ),
+        ClusterSink(target_table="fan_p2", path=str(tmp_path / "w2")),
+    ]
+    ok, results = fan_out(df, sinks, epoch_id=0)
+    assert not ok
+    assert [(r.sink, r.status) for r in results] == [
+        ("fan_p1", "loaded"), ("fan_bad", "error"), ("fan_p2", "loaded")
+    ]
+    assert "NO_SUCH_TABLE" in results[1].error.upper()
+    for w, t in (("w1", "fan_p1"), ("w2", "fan_p2")):
+        got = spark.read.parquet(str(tmp_path / w / t)).collect()
+        assert sorted((r.id, r.val) for r in got) == [(1, "a"), (2, "b"), (3, "c")]
+    assert _read_table(spark, derby_url, "fan_bad").count() == 0
+
+
 def test_jdbc_sink_no_stage_tables_left(spark, derby_url):
     """Staging tables are dropped on success and failure alike."""
     jvm = spark.sparkContext._jvm

@@ -196,6 +196,73 @@ def test_multi_sink_fan_out_all_or_nothing(spark, tmp_path, sample_files):
     assert list(statuses.values()).count("loaded") == 1
 
 
+def test_fan_out_writes_sinks_concurrently_in_callers_job_group(
+    spark, tmp_path, jobs_in_group
+):
+    """S5: the sink writes run on pool threads, like the reference's
+    async.map over loadClusters, and each thread inherits the caller's
+    job group — so the writes are attributable and cancellable as one
+    batch. A thread that did not inherit it would put 0 jobs in it."""
+    from aws_lambda_redshift_loader_spark.streaming.sinks import fan_out
+
+    df = spark.createDataFrame([(1, 2, 3), (4, 5, 6)], ["a", "b", "c"])
+    sinks = [
+        ClusterSink(target_table="t1", path=str(tmp_path / "w1")),
+        ClusterSink(target_table="t2", path=str(tmp_path / "w2")),
+    ]
+    (ok, results), n_jobs = jobs_in_group(
+        "fan_out_group", lambda: fan_out(df, sinks)
+    )
+    assert ok and [r.status for r in results] == ["loaded", "loaded"]
+    assert n_jobs >= 2
+    for w, t in (("w1", "t1"), ("w2", "t2")):
+        got = spark.read.parquet(str(tmp_path / w / t)).collect()
+        assert sorted(tuple(r) for r in got) == [(1, 2, 3), (4, 5, 6)]
+
+
+def test_run_concurrently_gives_each_thunk_its_own_properties(spark, jobs_in_group):
+    """Every thunk inherits the caller's local properties (job group)
+    on a copy of its own: a property one pool thread sets while another
+    runs is invisible to the other. One wrapped function shared across
+    tasks would hand both threads the same Properties object, and
+    concurrent writes would overwrite each other's execution id."""
+    import threading
+
+    from aws_lambda_redshift_loader_spark.session import run_concurrently
+
+    sc = spark.sparkContext
+    both = threading.Barrier(2, timeout=30)
+
+    def setter():
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("alrs.test.owner", "setter")
+        both.wait()  # the reader runs while this value is set
+        both.wait()
+        return group
+
+    def reader():
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        both.wait()
+        seen = sc.getLocalProperty("alrs.test.owner")
+        both.wait()
+        return group, seen
+
+    (g1, (g2, seen)), _ = jobs_in_group(
+        "rc_group", lambda: run_concurrently(spark, [setter, reader], max_workers=2)
+    )
+    assert g1 == g2 == "rc_group"
+    assert seen is None
+    assert sc.getLocalProperty("alrs.test.owner") is None
+
+    def boom():
+        raise RuntimeError("boom")
+
+    done = []
+    with pytest.raises(RuntimeError, match="boom"):
+        run_concurrently(spark, [boom, lambda: done.append(1)], max_workers=2)
+    assert done == [1]  # the sibling still ran to completion
+
+
 def test_operational_queries_and_unlock(spark, tmp_path, sample_files):
     """§3.3: query by (status, lastUpdate range), describe, unlock, delete."""
     prefix = os.path.dirname(sample_files[0])

@@ -1837,3 +1837,66 @@ def test_incremental_transitions_replay_stitch_and_batch_equal(spark, tmp_path):
     run_epoch(0)
     run_epoch(2)
     assert resolved() == before
+
+
+def test_count_and_bytes_triggers_together_rejected_at_construction(spark, tmp_path):
+    """Spark's file source cannot take maxFilesPerTrigger with
+    maxBytesPerTrigger; a LoadConfig with both is refused when the
+    StreamIngest is built, not at the stream's first trigger. Either
+    one alone still starts and drains."""
+    import pytest
+
+    src = str(tmp_path / "in")
+    _write_files(src, 0, 2)
+
+    def cfg(name, **triggers):
+        return LoadConfig(
+            s3_prefix=src, data_format="CSV", csv_delimiter="|",
+            schema="a INT, b INT, c INT",
+            sinks=[ClusterSink(target_table="t", path=str(tmp_path / f"wh_{name}"))],
+            **triggers,
+        )
+
+    with pytest.raises(ValueError, match="batch_size and batch_size_bytes"):
+        StreamIngest(spark, cfg("both", batch_size=3, batch_size_bytes=1500), src,
+                     str(tmp_path / "ckpt_both"))
+    for name, triggers in (("count", {"batch_size": 1}),
+                           ("bytes", {"batch_size_bytes": 1500})):
+        StreamIngest(spark, cfg(name, **triggers), src,
+                     str(tmp_path / f"ckpt_{name}")).run_available()
+        df = spark.read.parquet(os.path.join(str(tmp_path / f"wh_{name}"), "t"))
+        assert df.count() == 4, name  # 2 files x 2 rows
+
+
+def test_foreach_batch_pool_threads_carry_the_streams_job_group(spark, tmp_path):
+    """Store bodies that a foreachBatch runs on session.run_concurrently
+    (the fused doc stream's pool) carry the stream's job group, its
+    runId, so StreamingQuery.stop() cancels their in-flight jobs too."""
+    from aws_lambda_redshift_loader_spark.session import run_concurrently
+
+    src = str(tmp_path / "in")
+    _write_files(src, 0, 1)
+    sc = spark.sparkContext
+    seen: list = []
+
+    def body(batch_df, epoch_id):
+        seen.extend(
+            run_concurrently(
+                spark,
+                [lambda: sc.getLocalProperty("spark.jobGroup.id")] * 3,
+                max_workers=3,
+            )
+        )
+
+    q = (
+        spark.readStream.schema("a INT, b INT, c INT").option("sep", "|").csv(src)
+        .writeStream.foreachBatch(body)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    assert seen == [str(q.runId)] * 3
