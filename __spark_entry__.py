@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from aws_lambda_redshift_loader_spark.plans.registry import load_all  # noqa: E402
+from aws_lambda_redshift_loader_spark.plans.registry import load_all, verification_order  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -26,10 +26,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    return {name: spec.fn for name, spec in load_all().items()}
+    """One entry per implemented operator from SURVEY.md §2, in
+    verification-priority order (correctness is checked on a prefix of it)."""
+    specs = load_all()
+    return {name: specs[name].fn for name in verification_order()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (omitted → rows-only check)."""
-    return {name: spec.oracle for name, spec in load_all().items() if spec.oracle is not None}
+    specs = load_all()
+    return {n: specs[n].oracle for n in verification_order() if specs[n].oracle is not None}

@@ -100,6 +100,32 @@ def _check_compression(paths: list[str], directive: str) -> None:
             )
 
 
+def configure_reader(reader, config: LoadConfig, schema: str | None, options: dict):
+    """Apply `config`'s format, CSV `sep`/`header`, `schema` and `options`
+    to `reader` — a `spark.read` or a `spark.readStream` — with
+    `config.reader_options` LAST, so the batch and stream paths parse a
+    file the same way."""
+    fmt = (config.data_format or "CSV").upper()
+    if schema:
+        reader = reader.schema(schema)
+    if fmt == "CSV":
+        reader = (
+            reader.format("csv")
+            # csvDelimiter (index.js:1174-1177); reference default '|'
+            .option("sep", config.csv_delimiter or "|")
+            # ignoreCsvHeader → IGNOREHEADER 1 (index.js:1178-1183)
+            .option("header", bool(config.ignore_csv_header))
+        )
+    else:
+        reader = reader.format(fmt.lower())
+    # copyOptions passthrough (index.js:1202-1204): user-supplied reader
+    # options apply LAST so they win over the structured defaults above
+    # (e.g. a custom quote/escape/dateFormat/nullValue for CSV).
+    for k, v in {**options, **(config.reader_options or {})}.items():
+        reader = reader.option(k, v)
+    return reader
+
+
 def read_files(
     spark: SparkSession,
     config: LoadConfig,
@@ -148,8 +174,8 @@ def read_files(
             df = df.select(*config.column_list)  # P7 ordered projection
         return df
 
-    reader = spark.read
     max_error = config.max_error
+    schema, options = config.schema, {}
     if max_error is not None and fmt in ("CSV", "JSON"):
         # COPY MAXERROR analog (copyOptions, index.js:1202-1204): parse
         # permissively into a corrupt-record column, budget the malformed
@@ -157,37 +183,11 @@ def read_files(
         # exactly Redshift's per-load error ceiling.
         if not config.schema:
             raise ValueError("max_error requires an explicit schema")
-        reader = reader.schema(config.schema + ", _corrupt_record STRING").option(
-            "mode", "PERMISSIVE"
-        ).option("columnNameOfCorruptRecord", "_corrupt_record")
-    elif config.schema:
-        reader = reader.schema(config.schema)
-
-    if fmt == "CSV":
-        reader = (
-            reader.format("csv")
-            # csvDelimiter (index.js:1174-1177); reference default '|'
-            .option("sep", config.csv_delimiter or "|")
-            # ignoreCsvHeader → IGNOREHEADER 1 (index.js:1178-1183)
-            .option("header", bool(config.ignore_csv_header))
-        )
-        if not config.schema and max_error is None:
-            reader = reader.option("inferSchema", True)
-    elif fmt == "JSON":
-        # jsonPath config (index.js:1167-1172): Redshift JSONPaths remap
-        # nested fields to columns; Spark's reader exposes the full nested
-        # struct, so a jsonPath spec becomes a post-read projection below.
-        reader = reader.format("json")
-    else:
-        reader = reader.format(fmt.lower())
-
-    # copyOptions passthrough (index.js:1202-1204): user-supplied reader
-    # options apply LAST so they win over the structured defaults above
-    # (e.g. a custom quote/escape/dateFormat/nullValue for CSV).
-    for k, v in (config.reader_options or {}).items():
-        reader = reader.option(k, v)
-
-    df = reader.load(paths)
+        schema = config.schema + ", _corrupt_record STRING"
+        options = {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"}
+    elif fmt == "CSV" and not config.schema:
+        options = {"inferSchema": True}
+    df = configure_reader(spark.read, config, schema, options).load(paths)
 
     if max_error is not None and fmt in ("CSV", "JSON"):
         from pyspark.sql import functions as F
@@ -213,7 +213,10 @@ def read_files(
         df = clean
 
     if fmt == "JSON" and config.json_path:
-        # JSONPaths list like ["$.a.b", "$.c"] → ordered column projection.
+        # jsonPath config (index.js:1167-1172): Redshift JSONPaths remap
+        # nested fields to columns; Spark's reader exposes the full nested
+        # struct, so a JSONPaths list like ["$.a.b", "$.c"] becomes an
+        # ordered post-read column projection.
         cols = []
         for i, jp in enumerate(_parse_jsonpaths(config.json_path)):
             dotted = jp.lstrip("$").lstrip(".")

@@ -203,42 +203,44 @@ def _write_jdbc(df: DataFrame, sink: ClusterSink, epoch_id: int | None = None) -
     With `epoch_id`, an epoch-ledger row commits atomically WITH the
     data (same transaction) and already-ledgered epochs are skipped —
     exactly-once under streaming epoch replay even though the stage
-    append itself re-runs."""
+    append itself re-runs.
+
+    Every driver-side step (ledger probe/create, ledger lookup, target
+    probe, swap transaction, stage drop) runs on ONE connection held for
+    the load: against a networked warehouse each connection is a TLS
+    handshake and a login."""
     import uuid
 
     spark = df.sparkSession
     ledger = f"{sink.target_table}_epochs"
-    if epoch_id is not None:
+    with _jdbc_statement(spark, sink) as (conn, stmt):
+        if epoch_id is not None:
+            if not _table_exists(stmt, ledger):
+                stmt.execute(f"CREATE TABLE {ledger} (epoch BIGINT PRIMARY KEY)")
+            if _scalar(stmt, f"SELECT COUNT(*) FROM {ledger} WHERE epoch = {int(epoch_id)}"):
+                return  # epoch already committed — replay is a no-op
+        stage = f"{sink.target_table}_stage_{uuid.uuid4().hex[:8]}"
+        # writer_options passthrough (copyOptions analog): JDBC write tuning
+        # such as batchsize / isolationLevel / createTableOptions, applied to
+        # both the target create and the parallel stage append.
+        extra = sink.writer_options or {}
+        if not _table_exists(stmt, sink.target_table):
+            # Create the target with df's schema (Spark creates-on-append).
+            # Only a missing table pays this 0-row Spark job.
+            df.limit(0).write.format("jdbc").options(
+                url=sink.jdbc_url, dbtable=sink.target_table, **extra
+            ).mode("append").save()
+        df.write.format("jdbc").options(
+            url=sink.jdbc_url, dbtable=stage, **extra
+        ).mode("overwrite").save()
+        swap = build_swap_statements(df.columns, sink, stage, epoch_id)
         try:
-            _run_jdbc_statements(
-                spark, sink, [f"CREATE TABLE {ledger} (epoch BIGINT PRIMARY KEY)"]
-            )
-        except Exception:
-            pass  # already exists
-        if _jdbc_scalar(spark, sink, f"SELECT COUNT(*) FROM {ledger} WHERE epoch = {int(epoch_id)}"):
-            return  # epoch already committed — replay is a no-op
-    stage = f"{sink.target_table}_stage_{uuid.uuid4().hex[:8]}"
-    # writer_options passthrough (copyOptions analog): JDBC write tuning
-    # such as batchsize / isolationLevel / createTableOptions, applied to
-    # both the target create and the parallel stage append.
-    extra = sink.writer_options or {}
-    if not _jdbc_table_exists(spark, sink, sink.target_table):
-        # Create the target with df's schema (Spark creates-on-append).
-        # Only a missing table pays this 0-row Spark job.
-        df.limit(0).write.format("jdbc").options(
-            url=sink.jdbc_url, dbtable=sink.target_table, **extra
-        ).mode("append").save()
-    df.write.format("jdbc").options(
-        url=sink.jdbc_url, dbtable=stage, **extra
-    ).mode("overwrite").save()
-    swap = build_swap_statements(df.columns, sink, stage, epoch_id)
-    try:
-        _run_jdbc_statements(spark, sink, swap)
-    finally:
-        try:
-            _run_jdbc_statements(spark, sink, [f"DROP TABLE {stage}"])
-        except Exception:
-            pass  # stage cleanup is best-effort; the load outcome stands
+            _run_transaction(conn, stmt, swap)
+        finally:
+            try:
+                _run_transaction(conn, stmt, [f"DROP TABLE {stage}"])
+            except Exception:
+                pass  # stage cleanup is best-effort; the load outcome stands
 
 
 @contextmanager
@@ -258,39 +260,45 @@ def _jdbc_statement(spark, sink: ClusterSink):
         conn.close()
 
 
-def _jdbc_scalar(spark, sink: ClusterSink, query: str) -> int:
+def _scalar(stmt, query: str) -> int:
     """Driver-side scalar SELECT (epoch-ledger lookups)."""
-    with _jdbc_statement(spark, sink) as (_, stmt):
-        rs = stmt.executeQuery(query)
+    rs = stmt.executeQuery(query)
+    try:
         rs.next()
         return int(rs.getLong(1))
+    finally:
+        rs.close()
 
 
-def _jdbc_table_exists(spark, sink: ClusterSink, table: str) -> bool:
+def _table_exists(stmt, table: str) -> bool:
     """Driver-side existence check with the probe Spark's own JDBC writer
     uses (`SELECT * FROM t WHERE 1=0`): no rows, no Spark job. A failed
-    probe reads as missing; the create append then reports any other
-    cause (e.g. a permissions error) as the load's error."""
-    with _jdbc_statement(spark, sink) as (_, stmt):
-        try:
-            stmt.executeQuery(f"SELECT * FROM {table} WHERE 1=0").close()
-            return True
-        except Py4JJavaError:  # java.sql.SQLException: no such table
-            return False
+    probe reads as missing; the create that follows then reports any
+    other cause (e.g. a permissions error) as the load's error."""
+    try:
+        stmt.executeQuery(f"SELECT * FROM {table} WHERE 1=0").close()
+        return True
+    except Py4JJavaError:  # java.sql.SQLException: no such table
+        return False
+
+
+def _run_transaction(conn, stmt, statements: list[str]) -> None:
+    """Run statements in ONE transaction (begin/commit wrapper,
+    index.js:1098-1100, 1234), rolled back on any failure."""
+    conn.setAutoCommit(False)
+    try:
+        for s in statements:
+            stmt.execute(s)
+        conn.commit()
+    except Exception:
+        conn.rollback()
+        raise
 
 
 def _run_jdbc_statements(spark, sink: ClusterSink, statements: list[str]) -> None:
-    """Run statements on ONE driver-side JDBC connection in ONE
-    transaction (begin/commit wrapper, index.js:1098-1100, 1234)."""
+    """Run statements on a fresh driver-side connection in one transaction."""
     with _jdbc_statement(spark, sink) as (conn, stmt):
-        conn.setAutoCommit(False)
-        try:
-            for s in statements:
-                stmt.execute(s)
-            conn.commit()
-        except Exception:
-            conn.rollback()
-            raise
+        _run_transaction(conn, stmt, statements)
 
 
 def fan_out(

@@ -33,6 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.reader import configure_reader
 from ..sources.routing import LoadConfig, filename_filter_col
 from ..session import tune
 from .sinks import fan_out
@@ -57,6 +58,18 @@ class StreamIngest:
         self.status_dir = status_dir
         if config.data_format.upper() not in ("CSV", "JSON", "AVRO", "PARQUET", "ORC"):
             raise ValueError(f"unsupported data format {config.data_format}")
+        unsupported = [
+            f for f in ("max_error", "json_path", "compression")
+            if getattr(config, f) is not None
+        ]
+        if unsupported:
+            # Batch-load checks (error budget, JSONPaths projection,
+            # codec-vs-extension) that read_files applies and a stream
+            # cannot: refuse rather than load differently.
+            raise ValueError(
+                f"prefix {config.s3_prefix}: {', '.join(unsupported)} "
+                "cannot be applied to a stream"
+            )
         if config.batch_size and config.batch_size_bytes:
             # Spark's file source refuses maxFilesPerTrigger together with
             # maxBytesPerTrigger, and would only say so at the first
@@ -70,34 +83,23 @@ class StreamIngest:
 
     def _reader(self):
         cfg = self.config
-        fmt = cfg.data_format.upper()
-        reader = self.spark.readStream
-        if cfg.schema:
-            reader = reader.schema(cfg.schema)
-        else:
+        if not cfg.schema:
             raise ValueError(
                 "streaming reads require a declared schema "
                 "(inference would re-scan history every restart)"
             )
-        if fmt == "CSV":
-            reader = (
-                reader.format("csv")
-                .option("sep", cfg.csv_delimiter or "|")
-                .option("header", bool(cfg.ignore_csv_header))
-            )
-        else:
-            reader = reader.format(fmt.lower())
+        options = {}
         if cfg.filename_filter_glob:
             # P2 filename filter, pushed to *file listing* (cheaper than a
             # row filter: unmatched files are never opened). This field is
             # a GLOB by contract; the regex form is applied post-read in
             # start() (fail-open, like the reference index.js:212-234).
-            reader = reader.option("pathGlobFilter", cfg.filename_filter_glob)
+            options["pathGlobFilter"] = cfg.filename_filter_glob
         if cfg.batch_size:
-            reader = reader.option("maxFilesPerTrigger", cfg.batch_size)  # T1
+            options["maxFilesPerTrigger"] = cfg.batch_size  # T1
         if cfg.batch_size_bytes:
-            reader = reader.option("maxBytesPerTrigger", cfg.batch_size_bytes)  # T2
-        return reader
+            options["maxBytesPerTrigger"] = cfg.batch_size_bytes  # T2
+        return configure_reader(self.spark.readStream, cfg, cfg.schema, options)
 
     def _load_micro_batch(self, df: DataFrame, epoch_id: int) -> None:
         """foreachBatch body = S4-S7: fan-out load + status record.

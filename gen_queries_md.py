@@ -35,8 +35,7 @@ def main() -> None:
         "tests/test_oracle.py on every pytest run). One line per query —",
         "the first sentence of its docstring; see the source for the full",
         "scale rationale and reference citations. Generated by",
-        "gen_queries_md.py; order = current verification priority",
-        "(changed/stale first — plans/registry.py).",
+        "gen_queries_md.py; order = registration order (plans/registry.py).",
         "",
         "| # | Query | Oracle | Summary |",
         "|---|---|---|---|",

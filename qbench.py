@@ -11,8 +11,9 @@ events the run emitted (so a cache-hit run is never mistaken for the
 standalone cost).  With --explain-dir, also writes
 ``<dir>/<name>.txt`` containing ``explain("formatted")`` for each query.
 
-This is measurement tooling only: it never persists results and shares
-bench.py's warmers so isolated numbers are comparable to BENCH_DETAIL rows.
+This is measurement tooling only: it never persists results and runs
+bench.py's warm_session so isolated numbers are comparable to
+BENCH_DETAIL rows.
 """
 
 from __future__ import annotations
@@ -26,54 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aws_lambda_redshift_loader_spark.plans.registry import load_all
 from aws_lambda_redshift_loader_spark.session import get_spark, release_persisted
-
-
-def warm(spark) -> None:
-    """Same session-shape warmers as bench.py (flagship scan, Python
-    worker daemon, grouped-Arrow, broadcast machinery, PPJoin shapes)."""
-    import pandas as _pd
-    from pyspark.sql import functions as _F
-
-    specs = load_all()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    specs["pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(32).mapInPandas(
-        lambda it: (_pd.DataFrame({"id": pdf["id"]}) for pdf in it), schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-    spark.range(64).withColumn("g", _F.col("id") % 4).groupBy("g").applyInPandas(
-        lambda pdf: _pd.DataFrame({"g": [int(pdf["g"].iloc[0])], "n": [len(pdf)]}),
-        schema="g long, n long",
-    ).write.format("noop").mode("overwrite").save()
-    spark.range(64).join(_F.broadcast(spark.range(8)), "id").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    from aws_lambda_redshift_loader_spark.functions.scalar import hex_hash64 as _hh64
-    from aws_lambda_redshift_loader_spark.operators import dedup as _dd
-
-    _tinydocs = spark.range(32).select(
-        _F.col("id").alias("doc_id"),
-        _F.concat_ws(
-            " ",
-            *[
-                _F.concat(_F.lit(f"w{j}x"), (_F.col("id") % (j + 2)))
-                for j in range(8)
-            ],
-        ).alias("text"),
-    )
-    _tsh = _dd._shingles_of(_tinydocs).select(
-        "doc_id", _hh64(_F.col("shingle")).alias("shingle")
-    )
-    _tw, _ts, _tc = _dd._ppjoin_candidates(_tsh, _dd.JACCARD_THRESHOLD)
-    _dd._ppjoin_verify_suffix(_tw, _ts, _tc, _dd.JACCARD_THRESHOLD).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    from aws_lambda_redshift_loader_spark.streaming.stream_queries import (
-        warm_stream_shapes,
-    )
-
-    warm_stream_shapes(spark)
+from bench import warm_session
 
 
 def main() -> None:
@@ -101,7 +55,7 @@ def main() -> None:
             names.extend(hits)
 
     if not args.no_warm:
-        warm(spark)
+        warm_session(spark, specs, args.sf_dir)
 
     if args.explain_dir:
         os.makedirs(args.explain_dir, exist_ok=True)

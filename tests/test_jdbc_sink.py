@@ -164,6 +164,34 @@ def test_fan_out_one_failing_sink_among_concurrent_writers(spark, derby_url, tmp
     assert _read_table(spark, derby_url, "fan_bad").count() == 0
 
 
+def test_jdbc_sink_epoch_load_opens_one_connection(spark, derby_url, monkeypatch):
+    """Every driver-side step of an epoch load (ledger probe/create,
+    ledger lookup, target probe, swap, stage drop) shares one JDBC
+    connection: the first load (ledger and target missing), a later
+    epoch, and a replayed epoch each open exactly one."""
+    from aws_lambda_redshift_loader_spark.streaming import sinks
+
+    opened = []
+    real = sinks._jdbc_statement
+
+    def counting(spark, sink):
+        opened.append(sink.target_table)
+        return real(spark, sink)
+
+    monkeypatch.setattr(sinks, "_jdbc_statement", counting)
+    df = spark.createDataFrame([(1, "a"), (2, "b")], ["id", "val"])
+    sink = ClusterSink(target_table="target_conn", jdbc_url=derby_url)
+    for epoch in (0, 1, 1):
+        before = len(opened)
+        res = write_to_sink(df, sink, epoch_id=epoch)
+        assert res.status == "loaded", res.error
+        assert len(opened) - before == 1
+    got = sorted(tuple(r) for r in _read_table(spark, derby_url, "target_conn").collect())
+    assert got == [(1, "a"), (1, "a"), (2, "b"), (2, "b")]
+    epochs = sorted(r[0] for r in _read_table(spark, derby_url, "target_conn_epochs").collect())
+    assert epochs == [0, 1]
+
+
 def test_jdbc_sink_no_stage_tables_left(spark, derby_url):
     """Staging tables are dropped on success and failure alike."""
     jvm = spark.sparkContext._jvm

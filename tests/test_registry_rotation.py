@@ -1,7 +1,9 @@
 """The mechanical verification-rotation derivation (plans/registry.py).
 
-The driver hash-verifies only the first ~50 registry entries each round,
-so load_all()'s ordering IS the instrument that retires stale verdicts.
+The correctness harness hash-verifies only the first ~50 entries of
+__spark_entry__.queries() each round, so registry.verification_order()
+IS the instrument that retires stale verdicts; load_all() itself returns
+registration order and starts no process.
 These tests lock the change-attribution helpers the derivation relies on:
 over-flagging floods the window (round-7 failure mode: appended
 registrations starved genuinely-changed queries out); under-flagging
@@ -114,11 +116,50 @@ def test_is_new_toplevel_only(tmp_path):
     assert not R._is_new_toplevel_only(str(tmp_path), "m2.py", 2, 2)
 
 
-def test_load_all_order_puts_unverified_first():
+def test_load_all_registers_every_query_with_resolved_oracles():
     q = R.load_all()
     assert len(q) >= 163
     # every oracle is a resolved string (lazy callables materialized)
     assert all(s.oracle is None or isinstance(s.oracle, str) for s in q.values())
+
+
+def test_load_all_starts_no_subprocess(monkeypatch):
+    """Name lookups (tests, bench, entry()) must not pay the git walk:
+    load_all() returns registration order without running git."""
+    import subprocess
+
+    calls = []
+    real_run = subprocess.run
+
+    def recording_run(*args, **kwargs):
+        calls.append(args[0] if args else kwargs.get("args"))
+        return real_run(*args, **kwargs)
+
+    monkeypatch.setattr(subprocess, "run", recording_run)
+    assert list(R.load_all()) == list(R.QUERIES)
+    assert calls == []
+
+
+def test_verification_order_puts_never_verified_before_verified(monkeypatch):
+    """Tier 0 (no green verdict) precedes tier 1 (changed since its own
+    green round), which precedes the rest, stalest round first."""
+    names = list(R.load_all())
+    never, changed = set(names[-3:]), {names[5]}
+    last = {n: 18 if i % 2 else 19 for i, n in enumerate(names) if n not in never}
+    monkeypatch.setattr(R, "_last_green_rounds", lambda root: last)
+    monkeypatch.setattr(R, "_verdict_commits", lambda root: {18: "a", 19: "b"})
+    monkeypatch.setattr(R, "_changed_queries", lambda root, last: changed)
+    order = R.verification_order()
+    assert sorted(order) == sorted(names)
+    assert set(order[:3]) == never
+    assert order[3] == names[5]
+    rounds = [last[n] for n in order[4:]]
+    assert rounds == sorted(rounds)
+
+
+def test_verification_order_without_git_is_registration_order(monkeypatch, tmp_path):
+    monkeypatch.setenv("GIT_DIR", str(tmp_path / "no_such_git_dir"))
+    assert R.verification_order() == list(R.load_all())
 
 
 def test_operator_modules_import_standalone():

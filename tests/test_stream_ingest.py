@@ -1900,3 +1900,43 @@ def test_foreach_batch_pool_threads_carry_the_streams_job_group(spark, tmp_path)
     finally:
         q.stop()
     assert seen == [str(q.runId)] * 3
+
+
+def test_stream_applies_reader_options_like_read_files(spark, tmp_path):
+    """The stream path parses a file exactly as the batch reader does,
+    LoadConfig.reader_options included: a CSV stream with quote,
+    nullValue and dateFormat options lands the rows read_files returns."""
+    from aws_lambda_redshift_loader_spark.sources.reader import read_files
+
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "f0.csv").write_text("'a val'|NA|2024~01~15\n'b|val'|7|2024~02~20\n")
+    cfg = LoadConfig(
+        s3_prefix=str(src),
+        data_format="CSV",
+        csv_delimiter="|",
+        schema="name STRING, n STRING, d DATE",
+        reader_options={"quote": "'", "nullValue": "NA", "dateFormat": "yyyy~MM~dd"},
+        sinks=[ClusterSink(target_table="t", path=str(tmp_path / "wh"))],
+    )
+    StreamIngest(spark, cfg, str(src), str(tmp_path / "ckpt")).run_available()
+    streamed = spark.read.parquet(str(tmp_path / "wh" / "t")).select("name", "n", "d")
+    batch = read_files(spark, cfg, str(src / "f0.csv"))
+    expected = sorted(tuple(r) for r in batch.collect())
+    assert sorted(tuple(r) for r in streamed.collect()) == expected
+    assert [r[1] for r in expected] == [None, "7"]
+
+
+def test_batch_only_fields_rejected_at_construction(spark, tmp_path):
+    """max_error, json_path and compression are batch-load checks the
+    file stream cannot apply; a LoadConfig setting one is refused when
+    the StreamIngest is built instead of loading differently."""
+    import pytest
+
+    for field, value in (("max_error", 0), ("json_path", "$.a"), ("compression", "GZIP")):
+        cfg = LoadConfig(
+            s3_prefix="x", data_format="JSON", schema="a INT", **{field: value},
+            sinks=[ClusterSink(target_table="t", path=str(tmp_path / "wh"))],
+        )
+        with pytest.raises(ValueError, match=field):
+            StreamIngest(spark, cfg, str(tmp_path / "in"), str(tmp_path / "ckpt"))

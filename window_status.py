@@ -2,8 +2,10 @@
 """Verification-window status: where every query sits in the driver's
 ~50-slot correctness window, by tier.
 
-The grading driver hash-verifies the FIRST ~50 entries of load_all()'s
-derived order each round (see plans/registry.py). Before registering new
+The correctness harness hash-verifies the FIRST ~50 entries of
+__spark_entry__.queries(), which follows registry.verification_order()
+(derived from git history and the CORRECTNESS files; see
+plans/registry.py). Before registering new
 queries (tier 0 — they go first and push everything down) or touching
 shared helpers (which promotes consumers to tier 1), run this to check
 the margin: the last tier-0/1 position must stay under 50, or some
@@ -25,8 +27,7 @@ WINDOW = 50
 
 
 def main() -> None:
-    q = R.load_all()
-    order = list(q)
+    order = R.verification_order()
     root = R._repo_root()
     last = R._last_green_rounds(root)
     tier0 = [n for n in order if n not in last]
