@@ -33,6 +33,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query (omitted → rows-only check)."""
-    specs = load_all()
-    return {n: specs[n].oracle for n in verification_order() if specs[n].oracle is not None}
+    """DuckDB-equivalent SQL per query (omitted → rows-only check), in
+    registration order; look it up by name."""
+    return {n: s.oracle for n, s in load_all().items() if s.oracle is not None}

@@ -106,8 +106,9 @@ def _resolve_lazy_oracles() -> None:
 # between a diff hunk and the query's current source span (or a
 # module-level hunk in the query's file — shared helpers/constants count
 # conservatively as touching every query in the module) marks the query
-# changed. Only `verification_order()` runs this; `load_all()` returns
-# registration order and starts no git process. The local
+# changed. Only `verification_tiers()` (behind `verification_order()`
+# and `window_status.py`) runs this; `load_all()` returns registration
+# order and starts no git process. The local
 # tests/test_oracle.py sweep covers ALL queries regardless of order.
 
 
@@ -440,12 +441,12 @@ def _rebound_import_names(root: str, rel: str, removed: tuple[str, ...]) -> set[
     return {name for name, src in old.items() if cur.get(name) != src}
 
 
-def _changed_queries(root: str, last: dict[str, int]) -> set[str]:
+def _changed_queries(
+    root: str, last: dict[str, int], commits: dict[int, str]
+) -> set[str]:
     """Queries whose source changed since their own last green driver
-    verdict — the tier-1 membership shared by `_derive_order` and the
-    pre-registration report `window_status.py` (extracted so the margin
-    report cannot drift from the order the driver actually uses)."""
-    commits = _verdict_commits(root)
+    verdict — the tier-1 membership of `_derive_order`, diffed against
+    the verdict ``commits`` it already read from git."""
     spans, members = _query_spans()
 
     changed: set[str] = set()
@@ -530,18 +531,23 @@ def _changed_queries(root: str, last: dict[str, int]) -> set[str]:
     return changed
 
 
-def _derive_order(reg_index: dict[str, int]) -> list[str]:
+def _derive_order(
+    reg_index: dict[str, int],
+) -> tuple[list[str], dict[str, int], set[str]]:
     """Mechanical verification-priority order: (1) queries with no green
     driver verdict yet, (2) queries whose source changed since their own
     last green round, (3) the rest, stalest round first; registration order
-    breaks ties within each tier."""
+    breaks ties within each tier. Returns (order, last green round per
+    query, changed queries) — the tiers the order was built from. One
+    `git log` per call."""
     root = _repo_root()
     last = _last_green_rounds(root)
     if not last:
         raise RuntimeError("no CORRECTNESS files found")
-    if not _verdict_commits(root):
+    commits = _verdict_commits(root)
+    if not commits:
         raise RuntimeError("no verdict commits found")
-    changed = _changed_queries(root, last)
+    changed = _changed_queries(root, last, commits)
 
     def key(name: str) -> tuple[int, int, int]:
         if name not in last:
@@ -552,7 +558,7 @@ def _derive_order(reg_index: dict[str, int]) -> list[str]:
             tier = 2
         return (tier, last.get(name, 0), reg_index[name])
 
-    return sorted(QUERIES, key=key)
+    return sorted(QUERIES, key=key), last, changed
 
 
 def load_all() -> dict[str, QuerySpec]:
@@ -577,10 +583,10 @@ def load_all() -> dict[str, QuerySpec]:
     return dict(QUERIES)
 
 
-def verification_order() -> list[str]:
-    """Every registered query name in verification-priority order (see
-    ``_derive_order``), or in registration order when git or the
-    CORRECTNESS files are unavailable."""
+def verification_tiers() -> tuple[list[str], dict[str, int], set[str]]:
+    """``_derive_order``'s (order, last green round per query, changed
+    queries); without git or the CORRECTNESS files, registration order
+    and no verdicts."""
     names = list(load_all())
     try:
         return _derive_order({name: i for i, name in enumerate(names)})
@@ -596,4 +602,11 @@ def verification_order() -> list[str]:
             "order (verification rotation DISABLED):\n%s",
             traceback.format_exc(),
         )
-        return names
+        return names, {}, set()
+
+
+def verification_order() -> list[str]:
+    """Every registered query name in verification-priority order (see
+    ``_derive_order``), or in registration order when git or the
+    CORRECTNESS files are unavailable."""
+    return verification_tiers()[0]

@@ -13,6 +13,7 @@ replay) lives in streaming.batcher / .ledger / .replay.
 from __future__ import annotations
 
 import contextlib
+import functools
 import itertools
 
 from pyspark.sql import DataFrame, SparkSession
@@ -1450,175 +1451,192 @@ def ingest_neardup_epoch(
     return [(r["doc_a"], r["doc_b"]) for r in pobs.get["delta"]]
 
 
-# The shared ingest pipeline is run ONCE per (session, sf_dir) and
-# consumed by every doc-fed store reader (near-dup pair graph, CC labels,
-# curation, BM25, SimHash, CDC, winnowing, standing top-K, KMV, CMS,
-# token counts, value counts) — the production shape: ONE continuously
-# maintained ingest stream, many stores advanced per trigger, many
-# downstream consumers (round-18 verdict item 1, "fuse the multi-store
-# incremental triggers"). Previously each of these stores ran its OWN
-# micro-batch stream over the identical document split, so the suite
-# paid stream setup + {DOC_STREAM_EPOCHS} trigger cycles of
-# MicroBatchExecution/commit fixed cost ~10x over. The fused stream pays
-# it once, and the per-epoch store bodies — the SAME module-level epoch
-# functions the replay tests lock — run as independent jobs overlapped
-# by a small driver thread pool (guide §2.6: concurrent jobs back-fill
-# executors left idle by each small job's tail; FIFO scheduling keeps
-# the first-submitted long pole resourced first). Per-epoch store
-# CONTENT is bit-identical to the per-stream form: same split files,
-# same epoch ids (FileStreamSource orders by mtime then path — one
-# write job, name-ordered parts), same epoch bodies, and every reader's
-# oracle hash gates it. Labeled "docstream_build"/"docstream_hit" in
-# dedup.MEMO_EVENTS so BENCH_DETAIL attributes the one build to
-# whichever consumer ran first; scale instruments clear the memo so
-# exponents measure full builds.
-_DOCSTREAM_MEMO: dict[tuple[str, str], dict[str, object]] = {}
+# One ingest stream per source split, run ONCE per (session, sf_dir,
+# source) and consumed by every store reader of that source — the
+# production shape, and the reference's own (`loadClusters` loads one
+# prefix's batch into every cluster): ONE maintained ingest, many stores
+# advanced per trigger, many downstream consumers. Each source's split
+# is written once per build (through a memoized `_ensure_*_split` where
+# replay tests or a per-call stream read it too), streamed one file per
+# trigger by `_drain`, and every trigger runs that source's per-epoch
+# store bodies — the SAME module-level epoch functions the replay tests
+# lock — as independent jobs overlapped by a small driver thread pool
+# (guide §2.6: concurrent jobs back-fill executors left idle by each
+# small job's tail; FIFO scheduling keeps the first-submitted long pole
+# resourced first). Sources share a split only where their stores'
+# epoch counts agree (each builder asserts it). Epochs arrive in
+# FileStreamSource order, mtime then path, and a part file's mtime is
+# whenever its write task finished, so order-dependent stores (packing,
+# the gram drift prefixes, the transition seams) rely on splits that
+# set explicit ascending mtimes (the doc, embedding-segment and
+# event-ts splits). Build/hit events land in dedup.MEMO_EVENTS as
+# "<source>_stream_build" / "<source>_stream_hit", so BENCH_DETAIL
+# attributes each build to whichever consumer ran first; scale
+# instruments clear the memo so exponents measure full builds.
+_SOURCE_STREAM_MEMO: dict[tuple[str, str, str], dict[str, object]] = {}
 
 # 4 concurrent store jobs fill each other's scheduling tails without
-# fighting for executor cores; the neardup+CC chain (the long pole) is
-# submitted first so FIFO keeps it resourced (guide §2.6).
+# fighting for executor cores; each source submits its long pole first
+# (the doc stream's neardup+CC chain) so FIFO keeps it resourced.
 DOC_STREAM_POOL = 4
 
 
-def _ensure_doc_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
-    """Run the fused document-ingest stream once per (session, corpus):
-    documents split into {INC_NEARDUP_EPOCHS} range files, one file per
-    trigger, foreachBatch = EVERY doc-fed store's per-epoch maintenance
-    body (near-dup band+probe+verify + warm-start CC + feature pass,
-    SimHash sign+probe with mid-stream compaction, BM25 segment, CDC
-    chunks, winnowing sketch, standing top-K merge, KMV merge, CMS
-    counters, token counts, value counts) — one stream, one trigger
-    sequence, all stores advanced per trigger. Returns the store-path
-    map; see the block comment for the fusion/identity argument."""
-    from ..operators import dedup as _dedup
-    from ..operators.dedup import _doc_features
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DOCSTREAM_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("docstream_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("docstream_build")
-
-    tune(spark)
-    assert (
-        INC_NEARDUP_EPOCHS == INC_BM25_EPOCHS == INC_SIMHASH_EPOCHS
-        == INC_CDC_EPOCHS == INC_WINNOW_EPOCHS == INC_TOPK_EPOCHS
-        == INC_KMV_EPOCHS == INC_CMS_EPOCHS == INC_TOK_EPOCHS
-        == INC_VALCOUNT_EPOCHS
-    ), "fused doc stream assumes one shared epoch split"
-    nd_store = _e2e_tmpdir("alrs_inc_store_")
-    docs_wh = _e2e_tmpdir("alrs_inc_docs_")
-    pairs_dir = _e2e_tmpdir("alrs_inc_pairs_")
-    cc_dir = _e2e_tmpdir("alrs_inc_cc_")
-    cc2_dir = _e2e_tmpdir("alrs_inc_cc2_")
-    bm25_dir = _e2e_tmpdir("alrs_bm25_segs_")
-    sim_store = _e2e_tmpdir("alrs_sim_store_")
-    sim_store2 = _e2e_tmpdir("alrs_sim_store2_")
-    cdc_store = _e2e_tmpdir("alrs_cdc_store_")
-    win_store = _e2e_tmpdir("alrs_win_store_")
-    topk_dir = _e2e_tmpdir("alrs_topk_state_")
-    kmv_dir = _e2e_tmpdir("alrs_kmv_state_")
-    cms_store = _e2e_tmpdir("alrs_cms_store_")
-    tok_store = _e2e_tmpdir("alrs_tok_store_")
-    val_store = _e2e_tmpdir("alrs_valcount_store_")
-
-    src = _ensure_doc_split(spark, sf_dir, INC_NEARDUP_EPOCHS)
-    schema = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "lang", "text")
-        .schema
-    )
+def _drain(spark: SparkSession, src: str, bodies: list, ckpt: str) -> None:
+    """Stream the split ``src`` (its top-level ``part-*`` files, one per
+    trigger) to the end, running every ``body(batch_df, epoch_id)`` of
+    ``bodies`` per trigger. Bodies run through
+    session.run_concurrently, so pool threads inherit the epoch's job
+    group and ``q.stop()`` cancels their in-flight jobs too; a body that
+    raises fails the epoch and the stream, and a rerun on the same
+    ``ckpt`` replays from the last committed epoch. The one stream
+    runner of the store section."""
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(spark.read.parquet(src).schema)
         .option("pathGlobFilter", "part-*")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    sim_bkts: dict[int, list[int]] = {}
 
     def update(batch_df: DataFrame, epoch_id: int) -> None:
-        # Each store body sees exactly the columns its former dedicated
-        # stream declared (parquet projection prunes the rest).
-        b2 = batch_df.select("doc_id", "text")
-        b3 = batch_df.select("doc_id", "lang", "text")
-
-        def run_neardup() -> None:
-            # Curation features ride the arrived-docs warehouse write
-            # (one job instead of a separate feature store): per-doc
-            # expressions, so batch-local equals corpus-global, and
-            # consumers read the feature columns from docs_wh with text
-            # pruned at the scan. Warm-start CC over the pair delta
-            # observed by the same write keeps labels a standing store
-            # (snapshot-compacted mid-stream, cc_epoch_with_compaction).
-            aug = b2.join(_doc_features(b2), "doc_id")
-            delta = ingest_neardup_epoch(
-                spark, aug, epoch_id, docs_wh, nd_store, pairs_dir
-            )
-            cc_epoch_with_compaction(
-                spark, epoch_id, pairs_dir, cc_dir, cc2_dir, delta_rows=delta
-            )
-
-        def run_simhash() -> None:
-            sim_bkts[epoch_id] = simhash_epoch_with_compaction(
-                spark, b2, epoch_id, sim_store, sim_store2, sim_bkts
-            )
-
-        tasks = [
-            run_neardup,
-            run_simhash,
-            lambda: ingest_bm25_epoch(spark, b2, epoch_id, bm25_dir),
-            lambda: ingest_cdc_epoch(spark, b2, epoch_id, cdc_store),
-            lambda: ingest_winnow_epoch(spark, b2, epoch_id, win_store),
-            lambda: merge_topk_epoch(spark, b2, epoch_id, topk_dir),
-            lambda: merge_kmv_epoch(spark, b3, epoch_id, kmv_dir),
-            lambda: ingest_cms_epoch(spark, b2, epoch_id, cms_store),
-            lambda: ingest_token_counts_epoch(spark, b2, epoch_id, tok_store),
-            lambda: ingest_valcount_epoch(spark, b2, epoch_id, val_store),
-        ]
-        # Pool threads inherit the epoch's job group, so q.stop()
-        # cancels in-flight sibling store jobs too.
-        run_concurrently(spark, tasks, DOC_STREAM_POOL)
+        run_concurrently(
+            spark,
+            [functools.partial(body, batch_df, epoch_id) for body in bodies],
+            DOC_STREAM_POOL,
+        )
 
     with _stream_shuffle(spark):
         q = (
             stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_docstream_ckpt_"))
+            .option("checkpointLocation", ckpt)
             .start()
         )
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+
+
+def _epoch_body(spark: SparkSession, fn, *args):
+    """``fn(spark, batch_df, epoch_id, *args)`` — a module-level epoch
+    function — as a `_drain` body."""
+    return lambda batch_df, epoch_id: fn(spark, batch_df, epoch_id, *args)
+
+
+def _ensure_source_stream(
+    spark: SparkSession, sf_dir: str, source: str
+) -> dict[str, object]:
+    """The store map of ``source``'s ingest stream (see the block
+    comment), built on first use per (session, corpus) by the source's
+    entry in ``_SOURCES``. A build that raises publishes nothing."""
+    from ..operators import dedup as _dedup
+
+    key = (spark.sparkContext.applicationId, sf_dir, source)
+    cached = _SOURCE_STREAM_MEMO.get(key)
+    if cached is not None:
+        _dedup.MEMO_EVENTS.append(f"{source}_stream_hit")
+        return cached
+    _dedup.MEMO_EVENTS.append(f"{source}_stream_build")
+    tune(spark)
+    _SOURCE_STREAM_MEMO[key] = _SOURCES[source](spark, sf_dir)
+    return _SOURCE_STREAM_MEMO[key]
+
+
+def _docs_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
+    """Documents split into {INC_NEARDUP_EPOCHS} ascending id ranges;
+    per trigger EVERY doc-fed store body: near-dup band+probe+verify +
+    warm-start CC + feature pass, SimHash sign+probe with mid-stream
+    compaction, BM25 segment, CDC chunks, winnowing sketch, standing
+    top-K merge, KMV merge, CMS counters, token counts, value counts,
+    and the two order-dependent packing stores."""
+    from ..operators.dedup import _doc_features
+
+    assert (
+        INC_NEARDUP_EPOCHS == INC_BM25_EPOCHS == INC_SIMHASH_EPOCHS
+        == INC_CDC_EPOCHS == INC_WINNOW_EPOCHS == INC_TOPK_EPOCHS
+        == INC_KMV_EPOCHS == INC_CMS_EPOCHS == INC_TOK_EPOCHS
+        == INC_VALCOUNT_EPOCHS == INC_PACK_EPOCHS
+    ), "the doc stream assumes one shared epoch split"
+    nd_store = _e2e_tmpdir("alrs_inc_store_")
+    docs_wh = _e2e_tmpdir("alrs_inc_docs_")
+    pairs_dir = _e2e_tmpdir("alrs_inc_pairs_")
+    cc_dir = _e2e_tmpdir("alrs_inc_cc_")
+    cc2_dir = _e2e_tmpdir("alrs_inc_cc2_")
+    sim_store = _e2e_tmpdir("alrs_sim_store_")
+    sim_store2 = _e2e_tmpdir("alrs_sim_store2_")
+    stores = {
+        "bm25": _e2e_tmpdir("alrs_bm25_segs_"),
+        "cdc": _e2e_tmpdir("alrs_cdc_store_"),
+        "winnow": _e2e_tmpdir("alrs_win_store_"),
+        "topk": _e2e_tmpdir("alrs_topk_state_"),
+        "kmv": _e2e_tmpdir("alrs_kmv_state_"),
+        "cms": _e2e_tmpdir("alrs_cms_store_"),
+        "token": _e2e_tmpdir("alrs_tok_store_"),
+        "valcount": _e2e_tmpdir("alrs_valcount_store_"),
+        "packing": _e2e_tmpdir("alrs_pack_store_"),
+        "budget_packing": _e2e_tmpdir("alrs_bpack_store_"),
+    }
+    sim_bkts: dict[int, list[int]] = {}
+
+    # Each store body sees exactly the columns its former dedicated
+    # stream declared (parquet projection prunes the rest).
+    text, with_lang = ("doc_id", "text"), ("doc_id", "lang", "text")
+
+    def neardup(batch_df: DataFrame, epoch_id: int) -> None:
+        # Curation features ride the arrived-docs warehouse write (one
+        # job instead of a separate feature store): per-doc expressions,
+        # so batch-local equals corpus-global, and consumers read the
+        # feature columns from docs_wh with text pruned at the scan.
+        # Warm-start CC over the pair delta observed by the same write
+        # keeps labels a standing store (snapshot-compacted mid-stream,
+        # cc_epoch_with_compaction).
+        b2 = batch_df.select(*text)
+        delta = ingest_neardup_epoch(
+            spark, b2.join(_doc_features(b2), "doc_id"), epoch_id,
+            docs_wh, nd_store, pairs_dir,
+        )
+        cc_epoch_with_compaction(
+            spark, epoch_id, pairs_dir, cc_dir, cc2_dir, delta_rows=delta
+        )
+
+    def simhash(batch_df: DataFrame, epoch_id: int) -> None:
+        sim_bkts[epoch_id] = simhash_epoch_with_compaction(
+            spark, batch_df.select(*text), epoch_id, sim_store, sim_store2,
+            sim_bkts,
+        )
+
+    def body(fn, name: str, cols: tuple = text):
+        return lambda batch_df, epoch_id: fn(
+            spark, batch_df.select(*cols), epoch_id, stores[name]
+        )
+
+    _drain(
+        spark,
+        _ensure_doc_split(spark, sf_dir, INC_NEARDUP_EPOCHS),
+        [
+            neardup,
+            simhash,
+            body(ingest_bm25_epoch, "bm25"),
+            body(ingest_cdc_epoch, "cdc"),
+            body(ingest_winnow_epoch, "winnow"),
+            body(merge_topk_epoch, "topk"),
+            body(merge_kmv_epoch, "kmv", with_lang),
+            body(ingest_cms_epoch, "cms"),
+            body(ingest_token_counts_epoch, "token"),
+            body(ingest_valcount_epoch, "valcount"),
+            body(ingest_packing_epoch, "packing", with_lang),
+            body(ingest_budget_packing_epoch, "budget_packing", with_lang),
+        ],
+        _e2e_tmpdir("alrs_docstream_ckpt_"),
+    )
     # The SimHash store's deferred-delta design pays one post-stream
     # flush for the final epoch (see flush_simhash_delta).
     last = INC_SIMHASH_EPOCHS - 1
     flush_simhash_delta(spark, sim_store2, last, prev_bkts=sim_bkts.get(last))
-
-    _DOCSTREAM_MEMO[key] = {
-        # Consumers resolve the POST-compaction CC store (every
-        # pre-compaction node is in the snapshot); features ride docs_wh.
-        "neardup": (docs_wh, nd_store, pairs_dir, docs_wh, cc2_dir),
-        "bm25": bm25_dir,
-        "simhash": (sim_store, sim_store2),
-        "cdc": cdc_store,
-        "winnow": win_store,
-        "topk": topk_dir,
-        "kmv": kmv_dir,
-        "cms": cms_store,
-        "token": tok_store,
-        "valcount": val_store,
-    }
-    return _DOCSTREAM_MEMO[key]
-
-
-def _ensure_neardup_ingest(
-    spark: SparkSession, sf_dir: str
-) -> tuple[str, str, str, str, str]:
-    """(docs_wh, store, pairs_dir, feat_dir, cc_dir) of the shared
-    near-dup ingest — served by the fused doc stream (one stream, every
-    doc-fed store advanced per trigger; see _ensure_doc_stream)."""
-    return _ensure_doc_stream(spark, sf_dir)["neardup"]
+    # Consumers resolve the POST-compaction CC store (every
+    # pre-compaction node is in the snapshot); features ride docs_wh.
+    stores["neardup"] = (docs_wh, nd_store, pairs_dir, docs_wh, cc2_dir)
+    stores["simhash"] = (sim_store, sim_store2)
+    return stores
 
 
 def _register_incremental_neardup() -> None:
@@ -1640,7 +1658,7 @@ def _register_incremental_neardup() -> None:
         The oracle is the full batch recompute, so the driver's hash
         gate proves incremental == batch. The ingest itself runs once
         per session and is SHARED with stream_incremental_curation (one
-        maintained pipeline, many consumers — see _ensure_neardup_ingest;
+        maintained pipeline, many consumers — see _docs_stream;
         BENCH_DETAIL's memo_events labels which consumer paid the build).
 
         Scale: per epoch the work is O(batch) banding + a bucket-pruned,
@@ -1648,7 +1666,7 @@ def _register_incremental_neardup() -> None:
         verification that touches ONLY candidate docs. The full corpus
         is never re-shingled or re-scanned after its arrival epoch — the
         delta cost a 100 TB corpus needs when 0.1% arrives daily."""
-        _, _, pairs_dir, _, _ = _ensure_neardup_ingest(spark, sf_dir)
+        _, _, pairs_dir, _, _ = _ensure_source_stream(spark, sf_dir, "docs")["neardup"]
         return spark.read.parquet(pairs_dir).select("doc_a", "doc_b", "jaccard")
 
 
@@ -1666,100 +1684,6 @@ _register_incremental_neardup()
 # oracle (the same trained-quantizer CTE chain that gates
 # embedding_ivf_topk).
 INC_IVF_EPOCHS = 4
-
-
-# Quantized-embedding range split, per (session, corpus) — r18. Three
-# ingest streams (IVF postings, the IVF refresh stream, the gann base
-# ingest) each wrote the IDENTICAL source split: scan embeddings →
-# _quantize → repartitionByRange({INC_IVF_EPOCHS}, vec_id) → parquet.
-# repartitionByRange on the same input is deterministic, so sharing the
-# one written split changes no epoch boundary any consumer sees; it just
-# stops re-deriving the same files. MEMO_EVENTS-labeled (qemb_split_build
-# / qemb_split_hit) so BENCH_DETAIL attributes the one write;
-# scale_bench clears it so exponents still price the full derive.
-_QEMBSPLIT_MEMO: dict[tuple[str, str], str] = {}
-
-
-def _ensure_quantized_emb_split(spark: SparkSession, sf_dir: str) -> str:
-    from ..operators import dedup as _dedup
-    from ..operators.similarity import _quantize
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _QEMBSPLIT_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("qemb_split_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("qemb_split_build")
-    src = _e2e_tmpdir("alrs_qemb_src_")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _quantize("embedding").alias("e")
-    )
-    emb.repartitionByRange(INC_IVF_EPOCHS, "vec_id").write.mode(
-        "overwrite"
-    ).parquet(src)
-    _QEMBSPLIT_MEMO[key] = src
-    return src
-
-
-# The IVF postings store is consumed by the search entry AND the
-# stream-served occupancy audit — one ingest per (session, corpus).
-_IVFSTORE_MEMO: dict[tuple[str, str], tuple] = {}
-
-
-def _ensure_ivf_ingest(spark: SparkSession, sf_dir: str) -> tuple:
-    """Run (once per session per corpus) the IVF maintenance stream:
-    offline-trained quantizer, corpus split into {INC_IVF_EPOCHS} id
-    ranges, one epoch per trigger, per batch a map-only cell
-    assignment appended to the epoch-partitioned postings store.
-    Returns (postings_dir, ids, cent). Memoized."""
-    from ..operators import dedup as _dedup
-    from ..operators.similarity import (
-        IVF_TRAIN_ITERS,
-        _assign_cells,
-        _quantize,
-        _trained_centroids,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _IVFSTORE_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("ivf_ingest_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("ivf_ingest_build")
-
-    postings_dir = _e2e_tmpdir("alrs_ivf_postings_")
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _quantize("embedding").alias("e")
-    )
-    ids, cent = _trained_centroids(spark, sf_dir, IVF_TRAIN_ITERS)
-
-    src = _ensure_quantized_emb_split(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        _assign_cells(batch_df, ids, cent).write.mode("overwrite").parquet(
-            f"{postings_dir}/epoch={epoch_id}"
-        )
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_ivf_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    _IVFSTORE_MEMO[key] = (postings_dir, ids, cent)
-    return _IVFSTORE_MEMO[key]
 
 
 def _register_incremental_ivf() -> None:
@@ -1793,7 +1717,9 @@ def _register_incremental_ivf() -> None:
         from pyspark.sql.window import Window as W
 
         tune(spark)
-        postings_dir, ids, cent = _ensure_ivf_ingest(spark, sf_dir)
+        postings_dir, ids, cent = _ensure_source_stream(
+            spark, sf_dir, "emb_quantized"
+        )["ivf"]
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", _quantize("embedding").alias("e")
         )
@@ -1828,7 +1754,7 @@ def _register_stream_ivf_occupancy() -> None:
         shares and hot factors — identical arithmetic to the batch
         ivf_occupancy_report, hash-gated on its oracle, proving the
         store-served audit equals the full recompute. Shares the
-        session's IVF ingest via _ensure_ivf_ingest (one build, two
+        session's IVF ingest via _emb_quantized_stream (one build, two
         consumers); the hot-cell signal here is what feeds the
         drift-triggered refresh decision at production scale.
 
@@ -1836,7 +1762,9 @@ def _register_stream_ivf_occupancy() -> None:
         aggregate + one broadcast scalar; maintenance is the shared
         ingest's O(batch) per epoch."""
         tune(spark)
-        postings_dir, _, _ = _ensure_ivf_ingest(spark, sf_dir)
+        postings_dir, _, _ = _ensure_source_stream(
+            spark, sf_dir, "emb_quantized"
+        )["ivf"]
         occ = (
             spark.read.parquet(postings_dir)
             .groupBy("cell")
@@ -1986,39 +1914,11 @@ def _register_incremental_ivf_refresh() -> None:
         )
 
         tune(spark)
-        store = _e2e_tmpdir("alrs_ivfr_store_")
-        store2 = _e2e_tmpdir("alrs_ivfr_store2_")
-
+        store2, ids2, cent2 = _ensure_source_stream(
+            spark, sf_dir, "emb_quantized"
+        )["ivf_refresh"]
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", _quantize("embedding").alias("e")
-        )
-        src = _ensure_quantized_emb_split(spark, sf_dir)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("pathGlobFilter", "part-*")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        geom: dict = {}
-
-        def update(batch_df: DataFrame, epoch_id: int) -> None:
-            ivf_epoch_with_refresh(
-                spark, batch_df, epoch_id, store, store2, sf_dir, geom
-            )
-
-        with _stream_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(update)
-                .option("checkpointLocation", _e2e_tmpdir("alrs_ivfr_ckpt_"))
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        ids2, cent2 = geom.get("v2") or _ivf_geometry(
-            spark, sf_dir, INC_IVF_REFRESH_AT
         )
         postings = spark.read.parquet(store2).select("vec_id", "e", "cell")
         queries = emb.filter(F.col("vec_id") < N_QUERIES)
@@ -2111,11 +2011,11 @@ def _register_incremental_bm25() -> None:
         micro-batch, half the per-epoch fixed cost of separate stores.
         The segment maintenance rides the fused doc stream (r19: one
         stream advances every doc-fed store per trigger — see
-        _ensure_doc_stream; ingest_bm25_epoch is this store's body)."""
+        _docs_stream; ingest_bm25_epoch is this store's body)."""
         from ..operators.text import _bm25_rank
 
         tune(spark)
-        seg_dir = _ensure_doc_stream(spark, sf_dir)["bm25"]
+        seg_dir = _ensure_source_stream(spark, sf_dir, "docs")["bm25"]
         segs = spark.read.parquet(seg_dir)
         postings = segs.filter(~F.col("is_query")).select("doc_id", "token", "tf")
         qterms = segs.filter(F.col("is_query")).select(
@@ -2149,7 +2049,7 @@ _register_incremental_bm25()
 # corpus_curation_e2e is the oracle — per-batch curation decisions with
 # the batch pipeline's exact semantics. The ingest (including the
 # feature pass) is the SHARED per-session stream built by
-# _ensure_neardup_ingest, so within one session the pair-graph query
+# _docs_stream, so within one session the pair-graph query
 # and this one pay for it once between them.
 
 
@@ -2173,7 +2073,7 @@ def _register_incremental_curation() -> None:
         report epilogue over the feature store. Hash-gated equal to the
         batch corpus_curation_e2e. The ingest is SHARED with
         stream_incremental_neardup (one maintained pipeline, many
-        consumers — see _ensure_neardup_ingest).
+        consumers — see _docs_stream).
 
         Scale: ingest is O(batch) per epoch (near-dup delta + bucket-
         pruned label maintenance + map-only features); the read touches
@@ -2183,7 +2083,9 @@ def _register_incremental_curation() -> None:
         text after its arrival epoch."""
         from ..operators.dedup import _curation_report
 
-        _, _, _, feat_dir, cc_dir = _ensure_neardup_ingest(spark, sf_dir)
+        _, _, _, feat_dir, cc_dir = _ensure_source_stream(
+            spark, sf_dir, "docs"
+        )["neardup"]
         clusters = resolve_incremental_labels(spark, cc_dir)
         features = spark.read.parquet(feat_dir).select(
             "doc_id", "quality_score", "n_tokens", "split"
@@ -2215,7 +2117,7 @@ def _register_incremental_cc() -> None:
         the merge-event-sized remap — no CC at read time; maintenance
         cost is measured O(delta) by the ccprobe instrument
         (BENCH_SCALE stream_incremental_curation@ccprobe)."""
-        _, _, _, _, cc_dir = _ensure_neardup_ingest(spark, sf_dir)
+        _, _, _, _, cc_dir = _ensure_source_stream(spark, sf_dir, "docs")["neardup"]
         return resolve_incremental_labels(spark, cc_dir).select(
             "doc_id", "cluster_id"
         )
@@ -2248,7 +2150,7 @@ def _register_stream_cluster_sizes() -> None:
         aggregates (cluster grain, then size grain — both shrink
         monotonically); maintenance cost is the ingest's measured
         O(delta) per epoch (BENCH_SCALE ccprobe)."""
-        _, _, _, _, cc_dir = _ensure_neardup_ingest(spark, sf_dir)
+        _, _, _, _, cc_dir = _ensure_source_stream(spark, sf_dir, "docs")["neardup"]
         labels = resolve_incremental_labels(spark, cc_dir)
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
         n_docs = d.agg(F.count("*").cast("bigint").alias("n_docs"))
@@ -2544,11 +2446,11 @@ def _register_incremental_simhash() -> None:
         store, with verification fused into the probe join — and ONE
         output commit per trigger (deferred delta, see the block
         comment), plus one post-stream flush for the final epoch.
-        The store rides the fused doc stream (r19, _ensure_doc_stream),
+        The store rides the fused doc stream (r19, _docs_stream),
         which runs the compaction router per trigger and the
         final-epoch flush."""
         tune(spark)
-        store, store2 = _ensure_doc_stream(spark, sf_dir)["simhash"]
+        store, store2 = _ensure_source_stream(spark, sf_dir, "docs")["simhash"]
         pair_cols = ["doc_a", "doc_b", "hamming"]
         return (
             spark.read.parquet(store)
@@ -2623,9 +2525,9 @@ def _register_incremental_cdc() -> None:
         the chunk-hash groupBy is map-side combined on ~uniform md5
         keys. This is the write path a chunked 100 TB corpus store
         runs on every arrival batch. The store rides the fused doc
-        stream (r19, _ensure_doc_stream)."""
+        stream (r19, _docs_stream)."""
         tune(spark)
-        store = _ensure_doc_stream(spark, sf_dir)["cdc"]
+        store = _ensure_source_stream(spark, sf_dir, "docs")["cdc"]
         chunks = spark.read.parquet(store).select("doc_id", "chunk_hash", "chunk_len")
         return (
             chunks.groupBy("chunk_hash")
@@ -2684,9 +2586,9 @@ def _register_incremental_winnow() -> None:
         is append-only. The sketch is ~len/w hashes per doc, so the
         store stays ~6% of corpus text — the copy-detection index shape
         a 100 TB corpus maintains per arrival batch. The store rides
-        the fused doc stream (r19, _ensure_doc_stream)."""
+        the fused doc stream (r19, _docs_stream)."""
         tune(spark)
-        store = _ensure_doc_stream(spark, sf_dir)["winnow"]
+        store = _ensure_source_stream(spark, sf_dir, "docs")["winnow"]
         return spark.read.parquet(store).select("doc_id", "fingerprint")
 
 
@@ -2915,12 +2817,6 @@ def _register_incremental_cosine() -> None:
         raw.repartitionByRange(INC_COSINE_EPOCHS, "vec_id").write.mode(
             "overwrite"
         ).parquet(src)
-        stream = (
-            spark.readStream.schema(raw.schema)
-            .option("pathGlobFilter", "part-*")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
         bkts: dict[int, list[int]] = {}
 
         def update(batch_df: DataFrame, epoch_id: int) -> None:
@@ -2929,16 +2825,7 @@ def _register_incremental_cosine() -> None:
                 prev_bkts=bkts.get(epoch_id - 1),
             )
 
-        with _stream_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(update)
-                .option("checkpointLocation", _e2e_tmpdir("alrs_cos_ckpt_"))
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(spark, src, [update], _e2e_tmpdir("alrs_cos_ckpt_"))
         last = INC_COSINE_EPOCHS - 1
         flush_cosine_delta(spark, store, last, prev_bkts=bkts.get(last))
         return (
@@ -3022,9 +2909,9 @@ def _register_stream_topk_quality() -> None:
         most K + batch rows — corpus-size-independent state, the
         standing-query/leaderboard shape. The global window the batch
         form needs never materializes here at all. The state chain
-        rides the fused doc stream (r19, _ensure_doc_stream)."""
+        rides the fused doc stream (r19, _docs_stream)."""
         tune(spark)
-        state_dir = _ensure_doc_stream(spark, sf_dir)["topk"]
+        state_dir = _ensure_source_stream(spark, sf_dir, "docs")["topk"]
         return spark.read.parquet(f"{state_dir}/epoch={INC_TOPK_EPOCHS - 1}").select(
             "doc_id", "quality_score", "rank"
         )
@@ -3071,25 +2958,24 @@ def ingest_drift_epoch(
     )
 
 
-# Drift-histogram store, built once per (session, sf_dir) and SHARED by
-# the PSI monitor and the KS monitor — the point of a mergeable
-# sufficient statistic is that any number of standing statistics read
-# the same store. Build/hit events land in dedup.MEMO_EVENTS (the
-# pair-graph labeling convention) so bench lines stay interpretable.
-_DRIFT_MEMO: dict[tuple[str, str], str] = {}
-
-# Range-split (doc_id, text) source files, built once per (session,
-# fixture, epoch count) and shared by every doc-fed incremental store
-# query (near-dup ingest, bm25, simhash, cdc, winnow, standing top-K):
-# the split is the simulated arrival order, identical across consumers,
-# and re-writing ~the corpus once per query was the single largest
-# shared fixed cost of the store family (~2.5 s each at sf0.1). The
-# source dir is consumed read-only (each query keeps its own stream
-# checkpoint), so sharing is safe.
+# Range-split (doc_id, lang, text) source files, built once per
+# (session, fixture, epoch count): the doc stream's simulated arrival
+# order, also read directly by the replay tests. The source dir is
+# consumed read-only, so sharing is safe.
 _SPLIT_MEMO: dict[tuple[str, str, int], str] = {}
 
 
 def _ensure_doc_split(spark: SparkSession, sf_dir: str, n: int) -> str:
+    """Ascending-doc_id-range split of the documents corpus with
+    STRICTLY INCREASING mtimes, so a maxFilesPerTrigger=1 stream
+    ingests epoch k == range k (FileStreamSource orders by timestamp;
+    repartitionByRange writes part files in range order, and any AQE
+    coalescing merges CONTIGUOUS ranges, preserving ascending order).
+    The packing stores depend on that order; the signature stores
+    sharing the stream are order-independent."""
+    import glob
+    import os
+
     from ..operators import dedup as _dedup
 
     key = (spark.sparkContext.applicationId, sf_dir, n)
@@ -3099,71 +2985,47 @@ def _ensure_doc_split(spark: SparkSession, sf_dir: str, n: int) -> str:
         return cached
     _dedup.MEMO_EVENTS.append("doc_split_build")
     src = _e2e_tmpdir("alrs_docsplit_")
-    # lang rides along for the consumers that group by it (the KMV
-    # store); parquet projection means doc_id/text-only consumers never
-    # read it — their declared readStream schemas stay 2-column.
+    # lang rides along for the bodies that group by it (KMV, packing);
+    # the doc_id/text-only bodies project it away, so parquet projection
+    # never reads it for them.
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", "text"
     )
     docs.repartitionByRange(n, "doc_id").write.mode("overwrite").parquet(src)
+    base = 1_600_000_000
+    for k, f in enumerate(sorted(glob.glob(f"{src}/part-*.parquet"))):
+        os.utime(f, (base + k, base + k))
     _SPLIT_MEMO[key] = src
     return src
 
 
-def _ensure_drift_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Stream the corpus one segment per trigger through
-    ingest_drift_epoch once per session per fixture; returns the
-    histogram store path."""
-    from ..operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DRIFT_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("drift_ingest_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("drift_ingest_build")
-
-    tune(spark)
+def _doc_nchars_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
+    """Documents' (doc_id, n_chars, seg) split into {INC_DRIFT_EPOCHS}
+    ascending id ranges; per trigger the drift-histogram body. The store
+    is SHARED by the PSI monitor, the KS monitor and the store
+    quantiles — the point of a mergeable sufficient statistic is that
+    any number of standing statistics read the same store."""
     src = _e2e_tmpdir("alrs_drift_src_")
     store = _e2e_tmpdir("alrs_drift_store_")
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "n_chars"
     )
     # Geometry (segment boundaries) fixed from the corpus BEFORE
     # streaming — 1-row bounded collect, the cosine-store pattern.
     mx = docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
-    segged = docs.withColumn(
+    docs.withColumn(
         "seg",
         F.expr(f"int((doc_id * {INC_DRIFT_EPOCHS}) div {int(mx) + 1})"),
+    ).repartitionByRange(INC_DRIFT_EPOCHS, "doc_id").write.mode(
+        "overwrite"
+    ).parquet(src)
+    _drain(
+        spark,
+        src,
+        [_epoch_body(spark, ingest_drift_epoch, store)],
+        _e2e_tmpdir("alrs_drift_ckpt_"),
     )
-    for s in range(INC_DRIFT_EPOCHS):
-        segged.filter(F.col("seg") == s).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/s{s}")
-    stream = (
-        spark.readStream.schema(segged.schema)
-        .option("pathGlobFilter", "part-*")
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_drift_epoch(spark, batch_df, epoch_id, store)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_drift_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    _DRIFT_MEMO[key] = store
-    return store
+    return {"drift": store}
 
 
 # The histogram-counts CTE both drift oracles share: rebuild the
@@ -3213,7 +3075,7 @@ def _register_stream_drift_monitor() -> None:
     @register("stream_drift_monitor", _oracle_sql)
     def stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Standing PSI drift monitor under streaming ingest (see block
-        comment): documents land one corpus segment per trigger; each
+        comment): documents land one id range per trigger; each
         epoch appends only its own fixed-width length-histogram counts
         (mergeable sufficient statistic, O(batch)); the final read
         computes PSI of every segment against segment 0 from the store
@@ -3223,7 +3085,7 @@ def _register_stream_drift_monitor() -> None:
         touches only (segs × bins) rows. The same store serves any
         reference choice (previous-segment PSI, rolling windows)
         without re-reading documents."""
-        store = _ensure_drift_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "doc_nchars")["drift"]
 
         # seg x bin cardinality rows, read per drift segment below and by
         # the returned frame — released by the harness after consumption.
@@ -3307,7 +3169,7 @@ def _register_stream_drift_monitor_ks() -> None:
     @register("stream_drift_monitor_ks", _oracle_sql)
     def stream_drift_monitor_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Kolmogorov-Smirnov drift beside the PSI monitor, over the
-        SAME mergeable histogram store (_ensure_drift_ingest — built
+        SAME mergeable histogram store (_doc_nchars_stream — built
         once per session, consumed by both standing statistics; that
         sharing is the point of keeping a sufficient statistic rather
         than a computed score). Per segment s vs reference segment 0:
@@ -3323,7 +3185,7 @@ def _register_stream_drift_monitor_ks() -> None:
         Scale: query-time math touches (segs x bins) store rows; the
         cumulative window orders BINS (fixed-width histogram support,
         bounded by data range / {DRIFT_BIN_W}), not documents."""
-        store = _ensure_drift_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "doc_nchars")["drift"]
         counts = defer_unpersist(
             spark.read.parquet(store)
             .groupBy("seg", "bin")
@@ -3411,7 +3273,7 @@ def _register_stream_store_quantiles() -> None:
     @register("stream_store_quantiles", _oracle_sql)
     def stream_store_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         """Approximate corpus quantiles served FROM the standing
-        histogram store — the third consumer of _ensure_drift_ingest
+        histogram store — the third consumer of _doc_nchars_stream
         (after the PSI and KS monitors), and the t-digest-style payoff
         of keeping a mergeable sufficient statistic: {INC_STORE_QUANTILES}-quantile
         boundaries of the document-length distribution computed from
@@ -3426,7 +3288,7 @@ def _register_stream_store_quantiles() -> None:
         (bounded by data range / {DRIFT_BIN_W}); the cumulative window
         orders bins, not documents; the k-range is a {INC_STORE_QUANTILES - 1}-row
         broadcast."""
-        store = _ensure_drift_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "doc_nchars")["drift"]
         merged = (
             spark.read.parquet(store)
             .groupBy("bin")
@@ -3557,9 +3419,9 @@ def _register_stream_kmv_distinct() -> None:
         over at most langs x (K + batch-vocab) rows. The exact side
         rescans the corpus only because the audit demands it. The
         state chain rides the fused doc stream (r19,
-        _ensure_doc_stream)."""
+        _docs_stream)."""
         tune(spark)
-        state_dir = _ensure_doc_stream(spark, sf_dir)["kmv"]
+        state_dir = _ensure_source_stream(spark, sf_dir, "docs")["kmv"]
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", "lang", "text"
         )
@@ -3641,12 +3503,12 @@ def _register_stream_cms() -> None:
         regardless of batch or corpus size; the merge touches
         epochs x DEPTH x WIDTH counter rows; the exact audit side in
         the report is what production drops. The counter store rides
-        the fused doc stream (r19, _ensure_doc_stream)."""
+        the fused doc stream (r19, _docs_stream)."""
         from ..functions.scalar import norm_text
         from ..operators.sketches import _cms_report
 
         tune(spark)
-        store = _ensure_doc_stream(spark, sf_dir)["cms"]
+        store = _ensure_source_stream(spark, sf_dir, "docs")["cms"]
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
             "doc_id", "text"
         )
@@ -3728,26 +3590,12 @@ def _register_incremental_skyline() -> None:
         p.repartitionByRange(INC_SKY_EPOCHS, "p_partkey").write.mode(
             "overwrite"
         ).parquet(src)
-        stream = (
-            spark.readStream.schema(p.schema)
-            .option("pathGlobFilter", "part-*")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        _drain(
+            spark,
+            src,
+            [_epoch_body(spark, ingest_skyline_epoch, store)],
+            _e2e_tmpdir("alrs_sky_ckpt_"),
         )
-
-        def update(batch_df: DataFrame, epoch_id: int) -> None:
-            ingest_skyline_epoch(spark, batch_df, epoch_id, store)
-
-        with _stream_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(update)
-                .option("checkpointLocation", _e2e_tmpdir("alrs_sky_ckpt_"))
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
         coords = spark.read.parquet(f"{store}/epoch={INC_SKY_EPOCHS - 1}")
         return (
@@ -3841,26 +3689,12 @@ def _register_incremental_skyline3d() -> None:
         li.repartitionByRange(INC_SKY3D_EPOCHS, "l_orderkey").write.mode(
             "overwrite"
         ).parquet(src)
-        stream = (
-            spark.readStream.schema(li.schema)
-            .option("pathGlobFilter", "part-*")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        _drain(
+            spark,
+            src,
+            [_epoch_body(spark, ingest_skyline3d_epoch, store)],
+            _e2e_tmpdir("alrs_sky3d_ckpt_"),
         )
-
-        def update(batch_df: DataFrame, epoch_id: int) -> None:
-            ingest_skyline3d_epoch(spark, batch_df, epoch_id, store)
-
-        with _stream_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(update)
-                .option("checkpointLocation", _e2e_tmpdir("alrs_sky3d_ckpt_"))
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
         coords = spark.read.parquet(
             f"{store}/epoch={INC_SKY3D_EPOCHS - 1}"
@@ -3909,7 +3743,6 @@ def ingest_gram_epoch(
     )
 
 
-_GRAM_MEMO: dict[tuple[str, str], str] = {}
 _EMBSEG_MEMO: dict[tuple[str, str], str] = {}
 
 
@@ -3977,65 +3810,6 @@ def _ensure_emb_segment_split(spark: SparkSession, sf_dir: str) -> str:
     return src
 
 
-def _ensure_gram_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Stream the embedding corpus one id-segment per trigger through
-    ingest_gram_epoch once per session per fixture; returns the moment
-    store path. SHARED between stream_incremental_gram_pc (sums the
-    store) and stream_gram_drift_monitor (consumes per-epoch prefixes)
-    — one maintained pipeline, two consumers, the neardup-ingest
-    pattern.
-
-    The split is DETERMINISTIC id prefixes (segment = vec_id div
-    ceil(n / {INC_GRAM_EPOCHS}), files fed in segment order via
-    explicit mtimes — _ensure_emb_segment_split, also shared by the
-    drift-triggered IVF refresh), not sampled repartitionByRange
-    boundaries: the
-    drift monitor's oracle is the batch gram_direction_drift CTE
-    restricted to id-prefix checkpoints, so epoch k must hold exactly
-    id-segment k. The sum-across-epochs consumer is boundary-
-    indifferent; the prefix consumer is what pins them."""
-    from ..operators import dedup as _dedup
-    from ..operators.similarity import _quantize
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GRAM_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("gram_ingest_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("gram_ingest_build")
-
-    tune(spark)
-    store = _e2e_tmpdir("alrs_gram_store_")
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _quantize("embedding").alias("e")
-    )
-    src = _ensure_emb_segment_split(spark, sf_dir)
-
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_gram_epoch(spark, batch_df, epoch_id, store)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_gram_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    _GRAM_MEMO[key] = store
-    return store
-
-
 def _register_incremental_gram() -> None:
     from ..plans.registry import QUERIES as _REG
 
@@ -4053,7 +3827,7 @@ def _register_incremental_gram() -> None:
         iteration as the batch plan. Hash-gated equal to
         gram_power_iteration, proving store-summed == one-pass. The
         ingest is SHARED with stream_gram_drift_monitor (see
-        _ensure_gram_ingest).
+        _emb_segment_stream).
 
         Scale: per epoch O(batch) GEMM + a DIM²-row write; the standing
         query reads DIM²·epochs rows however large the corpus grows —
@@ -4064,7 +3838,7 @@ def _register_incremental_gram() -> None:
 
         from ..operators.similarity import DIM, _gram_iterate
 
-        store = _ensure_gram_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "emb_segment")["gram"]
         g_rows = (
             spark.read.parquet(store)
             .groupBy("gi", "gj")
@@ -4104,7 +3878,7 @@ def _register_incremental_gram() -> None:
         assert GRAM_DRIFT_STEPS == INC_GRAM_EPOCHS, (
             "drift checkpoints must equal store epochs for the shared oracle"
         )
-        store = _ensure_gram_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "emb_segment")["gram"]
         rows = (
             spark.read.parquet(store)
             .groupBy("epoch", "gi", "gj")
@@ -4301,71 +4075,69 @@ def resolve_gann_graph(spark: SparkSession, edges_dir: str) -> DataFrame:
     ).dropDuplicates(["src", "dst"])
 
 
-# The base edge store is consumed by BOTH graph-ANN entries (the flat
-# search and the hierarchical one, whose base layer is identical by
-# construction) — the stream_cluster_sizes bill-payer pattern: whichever
-# entry runs first in a session pays the streaming ingest, the other
-# hits the memo. Deterministic per (session, sf_dir): same frozen id
-# segments, same offline quantizer, same epoch rule.
-_GANNBASE_MEMO: dict[tuple[str, str], tuple] = {}
-
-
-def _ensure_gann_ingest(spark: SparkSession, sf_dir: str) -> tuple:
-    """Run (once per session per corpus) the base graph-ANN streaming
-    maintenance: split the embedding corpus into {INC_GANN_EPOCHS}
-    ascending id ranges, stream them one file per trigger through
-    ingest_gann_epoch, and return (postings, edges_dir, ids, cent) for
-    consumers to resolve/search. Memoized — see _GANNBASE_MEMO."""
-    from ..operators import dedup as _dedup
+def _emb_quantized_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
+    """The quantized embedding corpus split into {INC_IVF_EPOCHS} id
+    ranges; per trigger the three bodies
+    that probe against an offline quantizer: IVF postings (map-only cell
+    assignment against the full-corpus quantizer), the fixed-epoch IVF
+    refresh (ivf_epoch_with_refresh), and the graph-ANN base layer
+    (ingest_gann_epoch). Returns ``ivf`` = (postings, ids, cent),
+    ``ivf_refresh`` = (refreshed postings, ids, cent) and ``gann`` =
+    (postings, edges_dir, ids, cent). The IVF and graph-ANN stores are
+    each read by two entries (search + occupancy audit; flat +
+    hierarchical search)."""
     from ..operators.similarity import (
         IVF_TRAIN_ITERS,
+        _assign_cells,
         _quantize,
         _trained_centroids,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GANNBASE_MEMO.get(key)
-    if cached:
-        _dedup.MEMO_EVENTS.append("gann_ingest_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("gann_ingest_build")
-
-    postings = _e2e_tmpdir("alrs_gann_post_")
-    edges_dir = _e2e_tmpdir("alrs_gann_edges_")
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _quantize("embedding").alias("e")
+    assert INC_IVF_EPOCHS == INC_GANN_EPOCHS, (
+        "the quantized stream assumes one shared epoch split"
     )
     ids, cent = _trained_centroids(spark, sf_dir, IVF_TRAIN_ITERS)
-    # INC_GANN_EPOCHS == INC_IVF_EPOCHS (both 4): the shared split's
-    # epoch count IS this stream's epoch count.
-    assert INC_GANN_EPOCHS == INC_IVF_EPOCHS
-    src = _ensure_quantized_emb_split(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    src = _e2e_tmpdir("alrs_qemb_src_")
+    spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", _quantize("embedding").alias("e")
+    ).repartitionByRange(INC_IVF_EPOCHS, "vec_id").write.mode(
+        "overwrite"
+    ).parquet(src)
+    postings_dir = _e2e_tmpdir("alrs_ivf_postings_")
+    ivfr_store = _e2e_tmpdir("alrs_ivfr_store_")
+    ivfr_store2 = _e2e_tmpdir("alrs_ivfr_store2_")
+    gann_postings = _e2e_tmpdir("alrs_gann_post_")
+    gann_edges = _e2e_tmpdir("alrs_gann_edges_")
+    geom: dict = {}
+
+    def ivf(batch_df: DataFrame, epoch_id: int) -> None:
+        _assign_cells(batch_df, ids, cent).write.mode("overwrite").parquet(
+            f"{postings_dir}/epoch={epoch_id}"
+        )
+
+    _drain(
+        spark,
+        src,
+        [
+            _epoch_body(
+                spark, ingest_gann_epoch, gann_postings, gann_edges, ids, cent
+            ),
+            _epoch_body(
+                spark, ivf_epoch_with_refresh, ivfr_store, ivfr_store2,
+                sf_dir, geom,
+            ),
+            ivf,
+        ],
+        _e2e_tmpdir("alrs_qemb_ckpt_"),
     )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_gann_epoch(
-            spark, batch_df, epoch_id, postings, edges_dir, ids, cent
-        )
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_gann_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    _GANNBASE_MEMO[key] = (postings, edges_dir, ids, cent)
-    return _GANNBASE_MEMO[key]
+    ids2, cent2 = geom.get("v2") or _ivf_geometry(
+        spark, sf_dir, INC_IVF_REFRESH_AT
+    )
+    return {
+        "ivf": (postings_dir, ids, cent),
+        "ivf_refresh": (ivfr_store2, ids2, cent2),
+        "gann": (gann_postings, gann_edges, ids, cent),
+    }
 
 
 def _register_incremental_gann() -> None:
@@ -4394,12 +4166,14 @@ def _register_incremental_gann() -> None:
         the resolve is over ≤ epochs·G rows per src. Replay-idempotent
         (pure function of epoch_id and frozen earlier segments —
         test-locked). The ingest itself is SHARED with the
-        hierarchical entry via _ensure_gann_ingest (identical base
+        hierarchical entry via _emb_quantized_stream (identical base
         layer by construction)."""
         from ..operators.similarity import _gann_search, _quantize
 
         tune(spark)
-        _, edges_dir, _, _ = _ensure_gann_ingest(spark, sf_dir)
+        _, edges_dir, _, _ = _ensure_source_stream(
+            spark, sf_dir, "emb_quantized"
+        )["gann"]
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", _quantize("embedding").alias("e")
         )
@@ -4435,7 +4209,7 @@ def _drift_refresh_step(spark: SparkSession, sf_dir: str) -> int:
         _drift_series,
     )
 
-    store = _ensure_gram_ingest(spark, sf_dir)
+    store = _ensure_source_stream(spark, sf_dir, "emb_segment")["gram"]
     rows = (
         spark.read.parquet(store)
         .groupBy("epoch", "gi", "gj")
@@ -4575,34 +4349,21 @@ def _register_incremental_ivf_drift_refresh() -> None:
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
             "vec_id", _quantize("embedding").alias("e")
         )
-        src = _ensure_emb_segment_split(spark, sf_dir)
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("pathGlobFilter", "part-*")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        # The refresh step reads the finished gram store, so it is taken
+        # before this stream starts rather than from inside an epoch.
+        geom: dict = {"r": _drift_refresh_step(spark, sf_dir)}
+        _drain(
+            spark,
+            _ensure_emb_segment_split(spark, sf_dir),
+            [
+                _epoch_body(
+                    spark, ivf_epoch_with_drift_refresh, store, store2,
+                    sf_dir, geom,
+                )
+            ],
+            _e2e_tmpdir("alrs_ivfd_ckpt_"),
         )
-        geom: dict = {}
-
-        def update(batch_df: DataFrame, epoch_id: int) -> None:
-            ivf_epoch_with_drift_refresh(
-                spark, batch_df, epoch_id, store, store2, sf_dir, geom
-            )
-
-        with _stream_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(update)
-                .option("checkpointLocation", _e2e_tmpdir("alrs_ivfd_ckpt_"))
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        R = geom.get("r")
-        if R is None:
-            R = _drift_refresh_step(spark, sf_dir)
+        R = geom["r"]
         if R == 1:
             ids_f, cent_f = geom.get("v1") or _ivf_range_geometry(spark, sf_dir, 1)
             postings = spark.read.parquet(store).select("vec_id", "e", "cell")
@@ -4635,42 +4396,6 @@ _register_incremental_ivf_drift_refresh()
 # stored totals, and the union over epochs equals the batch plan — the
 # same single-window oracle hash-gates it.
 INC_PACK_EPOCHS = 4
-
-_PACKSPLIT_MEMO: dict[tuple[str, str], str] = {}
-
-
-def _ensure_doc_split_ordered(spark: SparkSession, sf_dir: str) -> str:
-    """Ascending-doc_id-range split of the documents corpus with
-    STRICTLY INCREASING mtimes, so a maxFilesPerTrigger=1 stream
-    ingests epoch k == range k (FileStreamSource orders by timestamp;
-    repartitionByRange writes part files in range order, and any AQE
-    coalescing merges CONTIGUOUS ranges, preserving ascending order).
-    The signature-store splits don't need this — their stores are
-    order-independent; the packing store is not."""
-    import glob
-    import os
-
-    from ..operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PACKSPLIT_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("pack_split_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("pack_split_build")
-    src = _e2e_tmpdir("alrs_packsplit_")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    docs.repartitionByRange(INC_PACK_EPOCHS, "doc_id").write.mode(
-        "overwrite"
-    ).parquet(src)
-    base = 1_600_000_000
-    for k, f in enumerate(sorted(glob.glob(f"{src}/part-*.parquet"))):
-        os.utime(f, (base + k, base + k))
-    _PACKSPLIT_MEMO[key] = src
-    return src
-
 
 def ingest_packing_epoch(
     spark: SparkSession, batch_df: DataFrame, epoch_id: int, store: str
@@ -4717,54 +4442,6 @@ def ingest_packing_epoch(
     )
 
 
-# The packing store is consumed by the plan entry AND the stream-served
-# manifest — one ingest per (session, corpus), the bill-payer pattern.
-_PACKSTORE_MEMO: dict[tuple[str, str], str] = {}
-
-
-def _ensure_packing_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Run (once per session per corpus) the order-dependent packing
-    maintenance stream (ascending id ranges through
-    ingest_packing_epoch) and return the store path. Memoized."""
-    from ..operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PACKSTORE_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("pack_ingest_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("pack_ingest_build")
-
-    store = _e2e_tmpdir("alrs_pack_store_")
-    src = _ensure_doc_split_ordered(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_packing_epoch(spark, batch_df, epoch_id, store)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_pack_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    _PACKSTORE_MEMO[key] = store
-    return store
-
-
 def _register_incremental_packing() -> None:
     from ..plans.registry import QUERIES as _REG
 
@@ -4792,7 +4469,7 @@ def _register_incremental_packing() -> None:
         from ..operators.text import PACK_SEQ_LEN as C
 
         tune(spark)
-        store = _ensure_packing_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "docs")["packing"]
         p = spark.read.parquet(f"{store}/plan").select(
             "doc_id", "lang", "n_tokens", "startpos"
         )
@@ -4829,7 +4506,7 @@ def _register_stream_packed_manifest() -> None:
         polls between epochs, without re-tokenizing or re-packing
         anything. Hash-gated on the batch manifest's oracle, proving
         the store-served manifest equals the full recompute. Shares
-        the session's packing ingest via _ensure_packing_ingest (one
+        the session's packing ingest via _docs_stream (one
         build, two consumers).
 
         Scale: read cost is the store scan + the token-volume-bounded
@@ -4838,7 +4515,7 @@ def _register_stream_packed_manifest() -> None:
         from ..operators.text import PACK_SEQ_LEN as C
 
         tune(spark)
-        store = _ensure_packing_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "docs")["packing"]
         p = spark.read.parquet(f"{store}/plan").select(
             "lang", "doc_id", "n_tokens", "startpos"
         )
@@ -4992,32 +4669,7 @@ def _register_incremental_budget_packing() -> None:
         (pure function of epoch_id and the frozen state chain —
         test-locked)."""
         tune(spark)
-        store = _e2e_tmpdir("alrs_bpack_store_")
-        src = _ensure_doc_split_ordered(spark, sf_dir)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "lang", "text"
-        )
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("pathGlobFilter", "part-*")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-        def update(batch_df: DataFrame, epoch_id: int) -> None:
-            ingest_budget_packing_epoch(spark, batch_df, epoch_id, store)
-
-        with _stream_shuffle(spark):
-            q = (
-                stream.writeStream.foreachBatch(update)
-                .option("checkpointLocation", _e2e_tmpdir("alrs_bpack_ckpt_"))
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
+        store = _ensure_source_stream(spark, sf_dir, "docs")["budget_packing"]
         return spark.read.parquet(f"{store}/plan").select(
             "doc_id", "lang", "bucket", "n_tokens",
             "first_seq", "first_off", "last_seq", "pad_before",
@@ -5056,7 +4708,7 @@ def _register_incremental_er() -> None:
         from ..operators import text as _text
         from ..operators.dedup import _weighted_survivorship_frame
 
-        _, _, _, _, cc_dir = _ensure_neardup_ingest(spark, sf_dir)
+        _, _, _, _, cc_dir = _ensure_source_stream(spark, sf_dir, "docs")["neardup"]
         labels = resolve_incremental_labels(spark, cc_dir).select(
             "doc_id", "cluster_id"
         )
@@ -5159,56 +4811,19 @@ def ingest_rules_epoch(
     )
 
 
-# The rules store is consumed by the rules entry AND the store-served
-# modularity monitor — one ingest per (session, corpus), the memoized
-# bill-payer pattern (_ensure_gann_ingest's r15 precedent, measured
-# there at ~19% of the pair's cost).
-_RULESSTORE_MEMO: dict[tuple[str, str], str] = {}
-
-
-def _ensure_rules_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Run (once per session per corpus) the basket-range support
-    maintenance stream (whole-basket ranges through
-    ingest_rules_epoch) and return the store path. Memoized —
-    stream_incremental_assoc_rules and stream_community_modularity
-    share one ingest."""
-    from ..operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _RULESSTORE_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("rules_ingest_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("rules_ingest_build")
-
+def _baskets_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
+    """Whole-basket l_orderkey ranges (_ensure_basket_split) through
+    ingest_rules_epoch. The support store is read by the assoc-rules
+    entry and, through _ensure_store_lpa, the two store-served
+    community monitors."""
     store = _e2e_tmpdir("alrs_rules_store_")
-    src = _ensure_basket_split(spark, sf_dir)
-    li_schema = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    ).schema
-    stream = (
-        spark.readStream.schema(li_schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    _drain(
+        spark,
+        _ensure_basket_split(spark, sf_dir),
+        [_epoch_body(spark, ingest_rules_epoch, store)],
+        _e2e_tmpdir("alrs_rules_ckpt_"),
     )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_rules_epoch(spark, batch_df, epoch_id, store)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_rules_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    _RULESSTORE_MEMO[key] = store
-    return store
+    return {"rules": store}
 
 
 def _register_incremental_rules() -> None:
@@ -5239,7 +4854,7 @@ def _register_incremental_rules() -> None:
         from ..operators.relational import _rules_from_supports
 
         tune(spark)
-        store = _ensure_rules_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "baskets")["rules"]
         st = spark.read.parquet(store)
         pairs = (
             st.filter(F.col("kind") == 0)
@@ -5349,7 +4964,7 @@ def _register_incremental_gann_hier() -> None:
         own (test-locked alongside the base store).
 
         The base ingest is SHARED with stream_incremental_gann via
-        _ensure_gann_ingest (the two base layers are identical by
+        _emb_quantized_stream (the two base layers are identical by
         construction); the upper maintenance then runs epoch by epoch
         over the frozen postings store — each ingest_gann_upper_epoch
         call consumes exactly the inputs the in-stream form saw
@@ -5358,7 +4973,9 @@ def _register_incremental_gann_hier() -> None:
         from ..operators.similarity import _gann_hier_search, _quantize
 
         tune(spark)
-        postings, edges_dir, _, _ = _ensure_gann_ingest(spark, sf_dir)
+        postings, edges_dir, _, _ = _ensure_source_stream(
+            spark, sf_dir, "emb_quantized"
+        )["gann"]
         uedges_dir = _e2e_tmpdir("alrs_gannh_uedges_")
 
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -5394,7 +5011,7 @@ def _ensure_store_lpa(spark: SparkSession, sf_dir: str):
     store-served community monitors (modularity + conductance) so the
     one read-time LPA recompute serves both readers, exactly the way
     the batch pair splits _lpa_frames. Memoized per (session, corpus);
-    the underlying ingest is _ensure_rules_ingest (shared further with
+    the underlying ingest is _baskets_stream (shared further with
     stream_incremental_assoc_rules)."""
     from ..operators import dedup as _dedup
     from ..operators.relational import _lpa_label_rounds
@@ -5405,7 +5022,7 @@ def _ensure_store_lpa(spark: SparkSession, sf_dir: str):
         _dedup.MEMO_EVENTS.append("store_lpa_hit")
         return cached
     _dedup.MEMO_EVENTS.append("store_lpa_build")
-    store = _ensure_rules_ingest(spark, sf_dir)
+    store = _ensure_source_stream(spark, sf_dir, "baskets")["rules"]
     pe = (
         spark.read.parquet(store)
         .filter(F.col("kind") == 0)
@@ -5439,7 +5056,7 @@ def _register_stream_community_modularity() -> None:
         """STORE-SERVED community-quality monitor — Newman modularity
         over the co-purchase graph REBUILT from the assoc-rules
         store's pair-support sums (the 15th store kind, shared ingest
-        with stream_incremental_assoc_rules via _ensure_rules_ingest:
+        with stream_incremental_assoc_rules via _baskets_stream:
         the resolved pair supports ARE the co-purchase edge weights,
         so the graph loop closes the way stream_ivf_occupancy closed
         IVF's). Labels are RECOMPUTED at read time — the r15
@@ -5521,7 +5138,7 @@ def _register_stream_budget_allocation() -> None:
         of data_budget_allocation) fed from the PACKING store's
         per-language token totals (the 13th store kind, shared ingest
         with stream_incremental_packing / stream_packed_manifest via
-        _ensure_packing_ingest) instead of a fresh corpus tokenize.
+        _docs_stream) instead of a fresh corpus tokenize.
         The production loop this closes: as curation streams documents
         in, the per-domain token totals advance one |languages|-row
         state write per epoch, and the data-constrained epoch plan
@@ -5537,7 +5154,7 @@ def _register_stream_budget_allocation() -> None:
         from ..operators.text import _waterfill
 
         tune(spark)
-        store = _ensure_packing_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "docs")["packing"]
         tot = spark.read.parquet(f"{store}/totals")
         last = tot.agg(F.max("epoch").alias("e")).collect()[0]["e"]
         sizes = tot.filter(F.col("epoch") == last).select(
@@ -5577,14 +5194,6 @@ def ingest_token_counts_epoch(
     )
 
 
-def _ensure_token_ingest(spark: SparkSession, sf_dir: str) -> str:
-    """Token-count store path — maintained by the fused doc stream
-    (r19, _ensure_doc_stream; ingest_token_counts_epoch is this store's
-    per-trigger body). stream_vocab_coverage and stream_zipf_slope
-    share it (the bill-payer pattern)."""
-    return _ensure_doc_stream(spark, sf_dir)["token"]
-
-
 def _resolve_token_counts(spark: SparkSession, store: str) -> DataFrame:
     """(token, f) resolved from the epoch deltas — one sum per token."""
     return (
@@ -5619,7 +5228,7 @@ def _register_token_store_readers() -> None:
         tune(spark)
         from ..operators.text import _coverage_epilogue
 
-        store = _ensure_token_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "docs")["token"]
         return _coverage_epilogue(_resolve_token_counts(spark, store))
 
     @register(
@@ -5628,7 +5237,7 @@ def _register_token_store_readers() -> None:
     )
     def stream_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         """STORE-SERVED Zipf exponent — the second reader of the
-        token-frequency store (shared _ensure_token_ingest; one
+        token-frequency store (shared _docs_stream; one
         ingest, two corpus-shape monitors): the OLS fit over the
         resolved top-ZIPF_K (100) head via the batch query's own
         epilogue (text._zipf_epilogue). A drifting live Zipf slope is
@@ -5641,7 +5250,7 @@ def _register_token_store_readers() -> None:
         tune(spark)
         from ..operators.text import _zipf_epilogue
 
-        store = _ensure_token_ingest(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "docs")["token"]
         return _zipf_epilogue(_resolve_token_counts(spark, store))
 
 
@@ -5657,9 +5266,6 @@ _register_token_store_readers()
 # batch), so the store is stateless mergeable at flag grain and replays
 # rewrite identical bytes. Resolve is a plain union: each corpus vector
 # arrives in exactly one epoch.
-_CONTAMSTORE_MEMO: dict[tuple[str, str], str] = {}
-
-
 def ingest_contamination_epoch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -5742,50 +5348,48 @@ def _register_stream_contamination() -> None:
         resolve is one read of the flag deltas; replay-idempotent
         (pure function of the static benchmark + the frozen batch —
         test-locked)."""
-        from ..operators import dedup as _dedup
-
         tune(spark)
-        key = (spark.sparkContext.applicationId, sf_dir)
-        store = _CONTAMSTORE_MEMO.get(key)
-        if store is not None:
-            _dedup.MEMO_EVENTS.append("contam_ingest_hit")
-        if store is None:
-            _dedup.MEMO_EVENTS.append("contam_ingest_build")
-            store = _e2e_tmpdir("alrs_contam_store_")
-            src = _ensure_emb_segment_split(spark, sf_dir)
-            bench = _contam_bench_frame(spark, sf_dir)
-            stream = (
-                spark.readStream.schema("vec_id long, e array<long>")
-                .option("pathGlobFilter", "part-*")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-            def update(batch_df: DataFrame, epoch_id: int) -> None:
-                ingest_contamination_epoch(
-                    spark, batch_df, epoch_id, store, bench
-                )
-
-            with _stream_shuffle(spark):
-                q = (
-                    stream.writeStream.foreachBatch(update)
-                    .option(
-                        "checkpointLocation", _e2e_tmpdir("alrs_contam_ckpt_")
-                    )
-                    .start()
-                )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-            _CONTAMSTORE_MEMO[key] = store
-
+        store = _ensure_source_stream(spark, sf_dir, "emb_segment")[
+            "contamination"
+        ]
         return spark.read.parquet(f"{store}/flags").select(
             "corpus_id", "bench_id", "cosine"
         )
 
 
 _register_stream_contamination()
+
+
+def _emb_segment_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
+    """The embedding corpus in deterministic id segments
+    (_ensure_emb_segment_split) through the moment-matrix body
+    (ingest_gram_epoch) and the contamination gate
+    (ingest_contamination_epoch). The gram store is read by
+    stream_incremental_gram_pc (sums the store), stream_gram_drift_monitor
+    (per-epoch prefixes) and the drift-triggered IVF refresh's trigger.
+
+    The split is DETERMINISTIC id prefixes (segment = vec_id div
+    ceil(n / {INC_GRAM_EPOCHS}), files fed in segment order via explicit
+    mtimes), not sampled repartitionByRange boundaries: the drift
+    monitor's oracle is the batch gram_direction_drift CTE restricted to
+    id-prefix checkpoints, so epoch k must hold exactly id-segment k. The
+    sum-across-epochs consumer and the contamination union are
+    boundary-indifferent; the prefix consumer is what pins them."""
+    gram_store = _e2e_tmpdir("alrs_gram_store_")
+    contam_store = _e2e_tmpdir("alrs_contam_store_")
+    _drain(
+        spark,
+        _ensure_emb_segment_split(spark, sf_dir),
+        [
+            _epoch_body(spark, ingest_gram_epoch, gram_store),
+            _epoch_body(
+                spark, ingest_contamination_epoch, contam_store,
+                _contam_bench_frame(spark, sf_dir),
+            ),
+        ],
+        _e2e_tmpdir("alrs_embseg_ckpt_"),
+    )
+    return {"gram": gram_store, "contamination": contam_store}
 
 
 # ---- Incremental user-time store (18th store kind) -------------------------
@@ -5800,7 +5404,6 @@ _register_stream_contamination()
 INC_KM_EPOCHS = 4
 
 _EVSPLIT_MEMO: dict[tuple[str, str, int], str] = {}
-_KMSTORE_MEMO: dict[tuple[str, str], str] = {}
 
 
 def _ensure_event_split(spark: SparkSession, sf_dir: str, n: int) -> str:
@@ -5859,45 +5462,6 @@ def ingest_km_epoch(
     )
 
 
-def _ensure_km_store(spark: SparkSession, sf_dir: str) -> str:
-    """Run (once per session per corpus) the user-time maintenance
-    stream and return the store path. Memoized: stream_kaplan_meier
-    and stream_logrank share one ingest (the bill-payer pattern)."""
-    from ..operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _KMSTORE_MEMO.get(key)
-    if store is not None:
-        _dedup.MEMO_EVENTS.append("km_ingest_hit")
-        return store
-    _dedup.MEMO_EVENTS.append("km_ingest_build")
-    store = _e2e_tmpdir("alrs_km_store_")
-    src = _ensure_event_split(spark, sf_dir, INC_KM_EPOCHS)
-    schema = "user_id long, event_type string, value double, day date"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_km_epoch(spark, batch_df, epoch_id, store)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_km_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    _KMSTORE_MEMO[key] = store
-    return store
-
-
 def _register_stream_km() -> None:
     from ..plans.registry import QUERIES as _REG
 
@@ -5925,7 +5489,7 @@ def _register_stream_km() -> None:
         from ..operators.windows_sql import _km_curve_from_user_times
 
         tune(spark)
-        store = _ensure_km_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_day")["km"]
         up = (
             spark.read.parquet(f"{store}/usertimes")
             .groupBy("user_id")
@@ -5954,9 +5518,6 @@ _register_stream_km()
 # first SEQUENCE-STITCHING store kind: sum-merge for the bulk, an
 # explicit order-dependent boundary algebra for the seams.
 INC_TRANS_EPOCHS = 4
-
-_TRANSSTORE_MEMO: dict[tuple[str, str], str] = {}
-
 
 def ingest_transition_epoch(
     spark: SparkSession, batch_df: DataFrame, epoch_id: int, store: str
@@ -6029,46 +5590,6 @@ def resolve_transition_counts(spark: SparkSession, store: str) -> DataFrame:
     )
 
 
-def _ensure_transition_store(spark: SparkSession, sf_dir: str) -> str:
-    """Run (once per session per corpus) the stitched transition
-    maintenance stream and return the store path. Memoized:
-    stream_transition_matrix and stream_markov_absorption share one
-    ingest (the bill-payer pattern)."""
-    from ..operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _TRANSSTORE_MEMO.get(key)
-    if store is not None:
-        _dedup.MEMO_EVENTS.append("trans_ingest_hit")
-        return store
-    _dedup.MEMO_EVENTS.append("trans_ingest_build")
-    store = _e2e_tmpdir("alrs_trans_store_")
-    src = _ensure_event_ts_split(spark, sf_dir, INC_TRANS_EPOCHS)
-    schema = "user_id long, event_id long, event_type string, ts timestamp"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_transition_epoch(spark, batch_df, epoch_id, store)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_trans_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    _TRANSSTORE_MEMO[key] = store
-    return store
-
-
 def _register_stream_transitions() -> None:
     from ..plans.registry import QUERIES as _REG
 
@@ -6096,7 +5617,7 @@ def _register_stream_transitions() -> None:
         user's epoch presence, never event-grain; replay-idempotent
         (pure function of the frozen batch — test-locked)."""
         tune(spark)
-        store = _ensure_transition_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_ts")["transitions"]
         pairs = resolve_transition_counts(spark, store)
         return pairs.select(
             "prev_type",
@@ -6128,7 +5649,7 @@ def _register_stream_transitions() -> None:
         from ..operators.windows_sql import _markov_vi
 
         tune(spark)
-        store = _ensure_transition_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_ts")["transitions"]
         pairs = resolve_transition_counts(spark, store)
         return _markov_vi(spark, pairs)
 
@@ -6160,8 +5681,8 @@ def _ensure_event_ts_split(spark: SparkSession, sf_dir: str, n: int) -> str:
     _dedup.MEMO_EVENTS.append("event_ts_split_build")
     staging = _e2e_tmpdir("alrs_evtstage_")
     src = _e2e_tmpdir("alrs_evtsplit_")
-    # `value` rides along for the hull-store consumer (the transition
-    # readers' explicit readStream schemas simply project it away).
+    # `value` rides along for the hull-store body (the transition body
+    # never reads it).
     ev = normalize_nanos(
         spark.read.parquet(f"{sf_dir}/events.parquet")
     ).select("user_id", "event_id", "event_type", "value", "ts")
@@ -6236,7 +5757,7 @@ def _register_stream_logrank() -> None:
         from ..operators.windows_sql import _logrank_from_user_times
 
         tune(spark)
-        store = _ensure_km_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_day")["km"]
         up = (
             spark.read.parquet(f"{store}/usertimes")
             .groupBy("user_id")
@@ -6279,7 +5800,7 @@ def _register_stream_sprt() -> None:
         from ..operators.windows_sql import _sprt_from_user_flags
 
         tune(spark)
-        store = _ensure_km_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_day")["km"]
         up = (
             spark.read.parquet(f"{store}/usertimes")
             .groupBy("user_id")
@@ -6330,9 +5851,6 @@ _register_stream_sprt()
 # group, so if a single type-day ever outgrows executor memory the
 # algebra admits ANY finer ts-prefix banding (hour, minute) unchanged
 # — offsets just order by the finer key; nothing else moves.
-_CUSUMSTORE_MEMO: dict[tuple[str, str], str] = {}
-
-
 def ingest_cusum_epoch(
     spark: SparkSession, batch_df: DataFrame, epoch_id: int, store: str
 ) -> None:
@@ -6417,47 +5935,23 @@ def ingest_cusum_epoch(
     )
 
 
-def _ensure_cusum_store(spark: SparkSession, sf_dir: str) -> str:
-    """Run (once per session per corpus) the hull-store maintenance
-    stream and return the store path. Shares the ts-range event split
-    with the transition store (same epoch count, same memoized
-    fixture)."""
-    from ..operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _CUSUMSTORE_MEMO.get(key)
-    if store is not None:
-        _dedup.MEMO_EVENTS.append("cusum_ingest_hit")
-        return store
-    _dedup.MEMO_EVENTS.append("cusum_ingest_build")
-    store = _e2e_tmpdir("alrs_cusum_store_")
-    src = _ensure_event_ts_split(spark, sf_dir, INC_TRANS_EPOCHS)
-    schema = (
-        "user_id long, event_id long, event_type string,"
-        " value double, ts timestamp"
+def _events_ts_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
+    """The raw event stream in strict ts ranges (_ensure_event_ts_split)
+    through the transition body and the CUSUM hull body — both rely on
+    the seam invariant (every event of epoch k precedes every event of
+    epoch k+1)."""
+    trans_store = _e2e_tmpdir("alrs_trans_store_")
+    cusum_store = _e2e_tmpdir("alrs_cusum_store_")
+    _drain(
+        spark,
+        _ensure_event_ts_split(spark, sf_dir, INC_TRANS_EPOCHS),
+        [
+            _epoch_body(spark, ingest_cusum_epoch, cusum_store),
+            _epoch_body(spark, ingest_transition_epoch, trans_store),
+        ],
+        _e2e_tmpdir("alrs_evts_ckpt_"),
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_cusum_epoch(spark, batch_df, epoch_id, store)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_cusum_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    _CUSUMSTORE_MEMO[key] = store
-    return store
+    return {"transitions": trans_store, "cusum": cusum_store}
 
 
 def _cusum_from_store(spark: SparkSession, store: str) -> DataFrame:
@@ -6530,7 +6024,7 @@ def _register_stream_cusum() -> None:
         serves: a mean-shift alarm re-derived per epoch at
         hull-vertex cost."""
         tune(spark)
-        store = _ensure_cusum_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_ts")["cusum"]
         return _cusum_from_store(spark, store)
 
 
@@ -6548,9 +6042,6 @@ _register_stream_cusum()
 # read path re-derives the boundary from the merged span and rolls
 # user-days up to (x, y) — history never rescanned, and the same
 # store serves every reader of the family.
-_SPENDSTORE_MEMO: dict[tuple[str, str], str] = {}
-
-
 def ingest_spend_epoch(
     spark: SparkSession, batch_df: DataFrame, epoch_id: int, store: str
 ) -> None:
@@ -6578,43 +6069,23 @@ def ingest_spend_epoch(
     )
 
 
-def _ensure_spend_store(spark: SparkSession, sf_dir: str) -> str:
-    """Run (once per session per corpus) the spend-store maintenance
-    stream and return the store path. Shares the day-range event
-    split fixture with the KM store (same epoch count, memoized)."""
-    from ..operators import dedup as _dedup
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    store = _SPENDSTORE_MEMO.get(key)
-    if store is not None:
-        _dedup.MEMO_EVENTS.append("spend_ingest_hit")
-        return store
-    _dedup.MEMO_EVENTS.append("spend_ingest_build")
-    store = _e2e_tmpdir("alrs_spend_store_")
-    src = _ensure_event_split(spark, sf_dir, INC_KM_EPOCHS)
-    schema = "user_id long, event_type string, value double, day date"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "part-*")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+def _events_day_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
+    """Events in day ranges (_ensure_event_split) through the user-time
+    body (KM, log-rank, SPRT, SRM read it) and the spend body (Welch t,
+    DiD). Both stores are min/max- or sum-mergeable, so any arrival
+    order gives the same resolve."""
+    km_store = _e2e_tmpdir("alrs_km_store_")
+    spend_store = _e2e_tmpdir("alrs_spend_store_")
+    _drain(
+        spark,
+        _ensure_event_split(spark, sf_dir, INC_KM_EPOCHS),
+        [
+            _epoch_body(spark, ingest_km_epoch, km_store),
+            _epoch_body(spark, ingest_spend_epoch, spend_store),
+        ],
+        _e2e_tmpdir("alrs_evday_ckpt_"),
     )
-
-    def update(batch_df: DataFrame, epoch_id: int) -> None:
-        ingest_spend_epoch(spark, batch_df, epoch_id, store)
-
-    with _stream_shuffle(spark):
-        q = (
-            stream.writeStream.foreachBatch(update)
-            .option("checkpointLocation", _e2e_tmpdir("alrs_spend_ckpt_"))
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    _SPENDSTORE_MEMO[key] = store
-    return store
+    return {"km": km_store, "spend": spend_store}
 
 
 def _spend_store_ux(spark: SparkSession, store: str) -> DataFrame:
@@ -6669,7 +6140,7 @@ def _register_stream_spend_readers() -> None:
         from ..operators.windows_sql import _welch_from_ux
 
         tune(spark)
-        store = _ensure_spend_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_day")["spend"]
         return _welch_from_ux(_spend_store_ux(spark, store))
 
     @register("stream_did", lambda: _REG["diff_in_differences"].oracle)
@@ -6686,7 +6157,7 @@ def _register_stream_spend_readers() -> None:
         from ..operators.windows_sql import _did_from_ux
 
         tune(spark)
-        store = _ensure_spend_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_day")["spend"]
         return _did_from_ux(_spend_store_ux(spark, store))
 
 
@@ -6718,13 +6189,6 @@ def ingest_valcount_epoch(
         .write.mode("overwrite")
         .parquet(f"{store}/counts/epoch={epoch_id}")
     )
-
-
-def _ensure_valcount_store(spark: SparkSession, sf_dir: str) -> str:
-    """Value-count store path — maintained by the fused doc stream
-    (r19, _ensure_doc_stream; ingest_valcount_epoch is this store's
-    per-trigger body). Shared by the rank-statistics readers."""
-    return _ensure_doc_stream(spark, sf_dir)["valcount"]
 
 
 def _valcount_per(spark: SparkSession, store: str) -> DataFrame:
@@ -6764,7 +6228,7 @@ def _register_stream_rank_readers() -> None:
         from ..operators.windows_sql import _mwu_from_counts
 
         tune(spark)
-        store = _ensure_valcount_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "docs")["valcount"]
         return _mwu_from_counts(spark, _valcount_per(spark, store))
 
     @register(
@@ -6785,7 +6249,7 @@ def _register_stream_rank_readers() -> None:
         from ..operators.windows_sql import _winsorized_from_counts
 
         tune(spark)
-        store = _ensure_valcount_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "docs")["valcount"]
         return _winsorized_from_counts(spark, _valcount_per(spark, store))
 
 
@@ -6812,7 +6276,7 @@ def _register_stream_srm() -> None:
         from ..operators.windows_sql import _srm_from_users
 
         tune(spark)
-        store = _ensure_km_store(spark, sf_dir)
+        store = _ensure_source_stream(spark, sf_dir, "events_day")["km"]
         u = (
             spark.read.parquet(f"{store}/usertimes")
             .select(
@@ -6825,3 +6289,15 @@ def _register_stream_srm() -> None:
 
 
 _register_stream_srm()
+
+
+# The ingest stream of each source, by name (see _ensure_source_stream).
+_SOURCES = {
+    "docs": _docs_stream,
+    "doc_nchars": _doc_nchars_stream,
+    "emb_quantized": _emb_quantized_stream,
+    "emb_segment": _emb_segment_stream,
+    "baskets": _baskets_stream,
+    "events_day": _events_day_stream,
+    "events_ts": _events_ts_stream,
+}

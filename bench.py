@@ -63,6 +63,14 @@ def substitutable(orig_memo_events: list[str]) -> bool:
     return not any(ev.endswith("_build") for ev in orig_memo_events)
 
 
+def prior_for_width(prior: dict, cpus: int) -> dict:
+    """The previous artifact ``prior`` if it was measured at this run's
+    width ``cpus``, else {}: times from another core count (or from an
+    artifact that records none) are not comparable, so they neither
+    trigger reruns nor enter the common-set ratio."""
+    return prior if prior.get("cpus") == cpus else {}
+
+
 def _cpu_ticks() -> list[int]:
     """Aggregate /proc/stat cpu counters (user nice system idle iowait
     irq softirq steal ...). Hypervisor steal is invisible to loadavg —
@@ -100,6 +108,7 @@ def main() -> None:
     # has 128 GiB — give the bench session real headroom.
     os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
     spark = get_spark("bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     specs = load_all()
     timings: dict[str, float] = {}
@@ -173,17 +182,22 @@ def main() -> None:
     # memo-BUILDING query hits the now-warm pair-graph memo, so its
     # rerun time is a cache hit, not a comparable standalone cost — it
     # is recorded but NOT substituted.
-    prev: dict[str, float] = {}
-    prev_raw: dict[str, float] = {}
     try:
         with open(detail_path) as fh:
             _d = json.load(fh)
-            prev = _d.get("queries", {})
-            prev_raw = {
-                k: v.get("bench", -1.0) for k, v in _d.get("flagged_reruns", {}).items()
-            }
     except Exception:
-        pass
+        _d = {}
+    if _d and not prior_for_width(_d, cpus):
+        print(
+            f"# bench prior ran at cpus={_d.get('cpus')}, this run at "
+            f"cpus={cpus}: no prior used",
+            file=sys.stderr,
+        )
+    _d = prior_for_width(_d, cpus)
+    prev: dict[str, float] = _d.get("queries", {})
+    prev_raw: dict[str, float] = {
+        k: v.get("bench", -1.0) for k, v in _d.get("flagged_reruns", {}).items()
+    }
     reruns: dict[str, dict] = {}
     for name, t in sorted(timings.items()):
         p = prev.get(name, -1.0)
@@ -239,6 +253,9 @@ def main() -> None:
         json.dump(
             {
                 "sf": sf,
+                # Execution width; a later run uses this artifact as
+                # its prior only at the same width (prior_for_width).
+                "cpus": cpus,
                 "total_sec": total,
                 "common_set_vs_prior": common_ratio,
                 # 1-min loadavg: sampled at start, after every query

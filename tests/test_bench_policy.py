@@ -62,3 +62,17 @@ def test_cpu_delta_pct_guards_both_snapshots():
     assert _cpu_delta_pct(full, later[:4]) == {}  # short after
     assert _cpu_delta_pct([], later) == {}
     assert _cpu_delta_pct(full, list(full)) == {}  # zero total
+
+
+def test_prior_used_only_at_the_same_width():
+    """A prior from another core count must not drive reruns or the
+    common-set ratio: the 8-core artifact was the prior of a 32-core run
+    (ROADMAP R2). An artifact without ``cpus`` predates the field and
+    cannot be matched either."""
+    from bench import prior_for_width
+
+    prior = {"cpus": 8, "queries": {"q": 1.0}}
+    assert prior_for_width(prior, 8) is prior
+    assert prior_for_width(prior, 32) == {}
+    assert prior_for_width({"queries": {"q": 1.0}}, 8) == {}
+    assert prior_for_width({}, 8) == {}

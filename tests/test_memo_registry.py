@@ -57,10 +57,11 @@ def _memo_assignments_in_source() -> set[tuple[str, str]]:
 def test_every_memo_dict_is_registered():
     registered = {(m, n) for m, n, _ in iter_session_memos()}
     in_source = _memo_assignments_in_source()
-    # Guard the scan itself: the r18 audit counted ~30 memos.
-    assert len(in_source) >= 25, sorted(in_source)
+    # Guard the scan itself: one memo per source stream leaves 18 in the
+    # package, 7 of them in stream_queries.
+    assert len(in_source) >= 18, sorted(in_source)
     assert ("aws_lambda_redshift_loader_spark.streaming.stream_queries",
-            "_DOCSTREAM_MEMO") in in_source
+            "_SOURCE_STREAM_MEMO") in in_source
     unregistered = in_source - registered
     assert not unregistered, f"memo dicts escaping clear: {sorted(unregistered)}"
     # Any memo-named dict attribute OUTSIDE the registered modules must be
@@ -85,7 +86,7 @@ def test_every_memo_dict_is_registered():
 def test_clear_session_memos_clears_everything():
     # Seed every registered memo with a sentinel, clear, assert empty.
     memos = [d for _, _, d in iter_session_memos()]
-    assert len(memos) >= 25  # the r18 audit counted ~30; guard the sweep
+    assert len(memos) >= 18  # the inventory the scan test counts; guard the sweep
     for d in memos:
         d["__sentinel__"] = object()
     n = clear_session_memos()
@@ -94,7 +95,8 @@ def test_clear_session_memos_clears_everything():
 
 
 def test_docstream_memo_registered():
-    # The r19 fused doc stream's memo must be in the sweep (the newest
-    # memo is always the one a hand list would have missed).
+    # The source-stream memo (the doc stream's and every other source's)
+    # must be in the sweep (the newest memo is always the one a hand
+    # list would have missed).
     names = {n for _, n, _ in iter_session_memos()}
-    assert "_DOCSTREAM_MEMO" in names
+    assert "_SOURCE_STREAM_MEMO" in names

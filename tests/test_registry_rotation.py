@@ -66,14 +66,17 @@ def test_rebound_import_names_flags_rewires_not_append_churn(tmp_path):
 
 
 def test_changed_queries_shared_by_window_status():
-    """window_status.py must consume registry._changed_queries rather than
-    keeping a drift-prone private copy of the tier-1 loop (ADVICE r8)."""
+    """window_status.py must take its tiers from the derivation that
+    builds the order (registry.verification_tiers) rather than keeping a
+    drift-prone private copy of the tier-1 loop (ADVICE r8) or walking
+    git a second time."""
     import re
 
     src = open(
         __file__.rsplit("/", 2)[0] + "/window_status.py"
     ).read()
-    assert "R._changed_queries(" in src
+    assert "R.verification_tiers(" in src
+    assert "_changed_queries" not in src and "R.verification_order(" not in src
     assert not re.search(r"def _changed_set\(", src)
 
 
@@ -148,13 +151,51 @@ def test_verification_order_puts_never_verified_before_verified(monkeypatch):
     last = {n: 18 if i % 2 else 19 for i, n in enumerate(names) if n not in never}
     monkeypatch.setattr(R, "_last_green_rounds", lambda root: last)
     monkeypatch.setattr(R, "_verdict_commits", lambda root: {18: "a", 19: "b"})
-    monkeypatch.setattr(R, "_changed_queries", lambda root, last: changed)
+    monkeypatch.setattr(R, "_changed_queries", lambda root, last, commits: changed)
     order = R.verification_order()
     assert sorted(order) == sorted(names)
     assert set(order[:3]) == never
     assert order[3] == names[5]
     rounds = [last[n] for n in order[4:]]
     assert rounds == sorted(rounds)
+
+
+def test_verification_order_reads_git_log_once(monkeypatch):
+    """One derivation walks the commit log once: `_derive_order` hands
+    the verdict commits it read to `_changed_queries`, whose per-round
+    work is `git diff` only."""
+    import subprocess
+
+    calls = []
+    real_run = subprocess.run
+
+    def recording_run(*args, **kwargs):
+        calls.append(args[0] if args else kwargs.get("args"))
+        return real_run(*args, **kwargs)
+
+    names = list(R.load_all())
+    monkeypatch.setattr(R, "_last_green_rounds", lambda root: {names[0]: 1})
+    monkeypatch.setattr(subprocess, "run", recording_run)
+    R.verification_order()
+    verbs = [c[3] for c in calls if c[:1] == ["git"]]
+    assert verbs.count("log") == 1, calls
+    assert "diff" in verbs  # the derivation ran past the commit lookup
+
+
+def test_oracle_sql_is_registration_order_without_git(monkeypatch):
+    """The driver looks oracles up by name; building the map must not
+    pay the git walk."""
+    import subprocess
+    import sys
+
+    sys.path.insert(0, __file__.rsplit("/", 2)[0])
+    import __spark_entry__ as E
+
+    calls = []
+    monkeypatch.setattr(subprocess, "run", lambda *a, **k: calls.append(a))
+    osql = E.oracle_sql()
+    assert calls == []
+    assert list(osql) == [n for n, s in R.load_all().items() if s.oracle is not None]
 
 
 def test_verification_order_without_git_is_registration_order(monkeypatch, tmp_path):

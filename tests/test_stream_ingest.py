@@ -1349,12 +1349,12 @@ def test_incremental_packing_replay_and_batch_equal(spark, tmp_path):
     from aws_lambda_redshift_loader_spark.operators.text import _pack_plan
     from aws_lambda_redshift_loader_spark.streaming.stream_queries import (
         INC_PACK_EPOCHS,
-        _ensure_doc_split_ordered,
+        _ensure_doc_split,
         ingest_packing_epoch,
     )
 
     sf = "/root/testdata/sf0.001"
-    src = _ensure_doc_split_ordered(spark, sf)
+    src = _ensure_doc_split(spark, sf, INC_PACK_EPOCHS)
     files = sorted(glob.glob(f"{src}/part-*.parquet"))
     assert len(files) == INC_PACK_EPOCHS
     store = str(tmp_path / "store")
@@ -1464,13 +1464,13 @@ def test_incremental_budget_packing_replay_and_batch_equal(spark, tmp_path):
     )
     from aws_lambda_redshift_loader_spark.streaming.stream_queries import (
         INC_PACK_EPOCHS,
-        _ensure_doc_split_ordered,
+        _ensure_doc_split,
         ingest_budget_packing_epoch,
     )
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
-    src = _ensure_doc_split_ordered(spark, sf)
+    src = _ensure_doc_split(spark, sf, INC_PACK_EPOCHS)
     files = sorted(glob.glob(f"{src}/part-*.parquet"))
     assert len(files) == INC_PACK_EPOCHS
     store = str(tmp_path / "store")
@@ -1940,3 +1940,72 @@ def test_batch_only_fields_rejected_at_construction(spark, tmp_path):
         )
         with pytest.raises(ValueError, match=field):
             StreamIngest(spark, cfg, str(tmp_path / "in"), str(tmp_path / "ckpt"))
+
+
+def test_source_stream_body_failure_publishes_nothing_and_replays(
+    spark, tmp_path, monkeypatch
+):
+    """Two store bodies share the drain runner; body B raises at epoch 1
+    after body A has committed epoch 1. _ensure_source_stream re-raises
+    and publishes no memo entry; rerunning the runner on the same
+    checkpoint replays epoch 1 and finishes, and both stores then equal
+    a clean run's (files at least once in, rows exactly once out)."""
+    import glob
+    import threading
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    from aws_lambda_redshift_loader_spark.streaming import stream_queries as SQ
+
+    src = str(tmp_path / "src")
+    spark.range(40).repartitionByRange(4, "id").write.parquet(src)
+    for k, f in enumerate(sorted(glob.glob(f"{src}/part-*.parquet"))):
+        os.utime(f, (1_600_000_000 + k, 1_600_000_000 + k))
+    a_committed = threading.Event()
+    fail = {"on": True}
+
+    def bodies(run):
+        store_a, store_b = str(tmp_path / run / "a"), str(tmp_path / run / "b")
+
+        def body_a(batch_df, epoch_id):
+            batch_df.write.mode("overwrite").parquet(f"{store_a}/epoch={epoch_id}")
+            if epoch_id == 1:
+                a_committed.set()
+
+        def body_b(batch_df, epoch_id):
+            if epoch_id == 1 and fail["on"]:
+                assert a_committed.wait(60)
+                raise RuntimeError("injected store failure")
+            batch_df.agg(
+                F.count("*").alias("n"), F.sum("id").alias("s")
+            ).write.mode("overwrite").parquet(f"{store_b}/epoch={epoch_id}")
+
+        return store_a, store_b, [body_a, body_b]
+
+    store_a, store_b, faulty = bodies("faulty")
+    ckpt = str(tmp_path / "ckpt")
+
+    def fault_source(spark_, sf_dir):
+        SQ._drain(spark_, src, faulty, ckpt)
+        return {"a": store_a, "b": store_b}
+
+    monkeypatch.setitem(SQ._SOURCES, "fault", fault_source)
+    with pytest.raises(Exception, match="injected store failure"):
+        SQ._ensure_source_stream(spark, src, "fault")
+    key = (spark.sparkContext.applicationId, src, "fault")
+    assert key not in SQ._SOURCE_STREAM_MEMO
+    assert os.path.isfile(f"{store_a}/epoch=1/_SUCCESS")
+    assert not os.path.exists(f"{store_b}/epoch=1")
+
+    fail["on"] = False
+    SQ._drain(spark, src, faulty, ckpt)
+    clean_a, clean_b, clean = bodies("clean")
+    SQ._drain(spark, src, clean, str(tmp_path / "ckpt_clean"))
+
+    def rows(store):
+        return sorted(tuple(r) for r in spark.read.parquet(store).collect())
+
+    assert rows(store_a) == rows(clean_a)
+    assert rows(store_b) == rows(clean_b)
+    assert len(rows(store_a)) == 40 and len(rows(store_b)) == 4

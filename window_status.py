@@ -5,7 +5,8 @@
 The correctness harness hash-verifies the FIRST ~50 entries of
 __spark_entry__.queries(), which follows registry.verification_order()
 (derived from git history and the CORRECTNESS files; see
-plans/registry.py). Before registering new
+plans/registry.py). The tiers below come from that same derivation,
+registry.verification_tiers(). Before registering new
 queries (tier 0 — they go first and push everything down) or touching
 shared helpers (which promotes consumers to tier 1), run this to check
 the margin: the last tier-0/1 position must stay under 50, or some
@@ -27,11 +28,8 @@ WINDOW = 50
 
 
 def main() -> None:
-    order = R.verification_order()
-    root = R._repo_root()
-    last = R._last_green_rounds(root)
+    order, last, changed = R.verification_tiers()
     tier0 = [n for n in order if n not in last]
-    changed = R._changed_queries(root, last)
     tier1 = [n for n in order if n in last and n in changed]
     obligated = tier0 + tier1
     last_ob = max((order.index(n) for n in obligated), default=-1)
