@@ -1,55 +1,52 @@
-"""Central registry of per-session memo dicts (round-18 verdict item 8).
+"""The one per-session memo of every shared intermediate.
 
-Every cross-query session memo in this package is a module-level dict
-named ``_*_MEMO`` keyed on (applicationId, corpus[, param]) in one of
-``MEMO_MODULES``. Scale instruments (scale_bench, the exponent tests)
-must price each query's FULL cost, so they clear every memo before a
-timed run — previously via hand-maintained lists in three places, which
-is exactly how a future memo silently escapes clearing (the gaming
-boundary the r18 verdict flagged). :func:`clear_session_memos` discovers
-the dicts by the naming convention instead, and
-``tests/test_memo_registry.py`` locks the convention: any ``_*_MEMO``
-module attribute anywhere in the package must be a dict reachable from
-here (a memo added in an unlisted module fails the test).
+Every cross-query reuse in this package — the dedup pair graph, the
+co-purchase supports, the trained quantizer, the scorer frames, the
+ingest-stream store maps and their source splits — goes through
+:func:`memo`, which keeps its values in the single ``_MEMO`` dict keyed
+``(applicationId, label, *key)``. A dead session's entries are never
+reused (the application id differs), and :func:`clear_session_memos` is
+the one eviction point: scale instruments (scale_bench, the exponent
+tests) and the perfbench query mix call it so each timed query prices
+its full cost.
 
-The memos themselves are within-session only (keyed per applicationId,
-mkdtemp-backed where they hold paths) — nothing persists across bench or
-oracle invocations; this registry exists so the clearing stays provably
-complete as memos are added.
+``MEMO_EVENTS`` is the append-only event log (``"<label>_build"`` /
+``"<label>_hit"``) that bench.py, qbench.py and perfbench read, through
+``operators.dedup.MEMO_EVENTS`` (the same list object), to tell a memo
+hit from a query's standalone cost.
+
+``tests/test_memo_registry.py`` locks the design: no other module-level
+``_*_MEMO`` dict and no ``MEMO_EVENTS.append`` outside this module.
 """
 
 from __future__ import annotations
 
-import importlib
-import re
-from typing import Iterator
+from typing import Callable, Hashable, TypeVar
 
-MEMO_MODULES = (
-    "aws_lambda_redshift_loader_spark.operators.dedup",
-    "aws_lambda_redshift_loader_spark.operators.similarity",
-    "aws_lambda_redshift_loader_spark.operators.text",
-    "aws_lambda_redshift_loader_spark.operators.relational",
-    "aws_lambda_redshift_loader_spark.streaming.stream_queries",
-)
+T = TypeVar("T")
 
-_MEMO_NAME = re.compile(r"_[A-Z0-9_]*_MEMO")
+MEMO_EVENTS: list[str] = []
+
+_MEMO: dict[tuple, object] = {}
 
 
-def iter_session_memos() -> Iterator[tuple[str, str, dict]]:
-    """Yield (module, attribute, dict) for every session memo."""
-    for modname in MEMO_MODULES:
-        mod = importlib.import_module(modname)
-        for name in dir(mod):
-            if _MEMO_NAME.fullmatch(name):
-                obj = getattr(mod, name)
-                if isinstance(obj, dict):
-                    yield modname, name, obj
+def memo(spark, label: str, key: tuple[Hashable, ...], build: Callable[[], T]) -> T:
+    """The value memoized under ``(applicationId, label, *key)``,
+    built by ``build()`` on first use. Logs ``<label>_hit`` or
+    ``<label>_build`` (before the build runs, so a nested memo's events
+    follow its parent's); a build that raises publishes nothing."""
+    k = (spark.sparkContext.applicationId, label, *key)
+    if k in _MEMO:
+        MEMO_EVENTS.append(f"{label}_hit")
+        return _MEMO[k]
+    MEMO_EVENTS.append(f"{label}_build")
+    value = build()
+    _MEMO[k] = value
+    return value
 
 
 def clear_session_memos() -> int:
-    """Clear every registered session memo; returns how many."""
-    n = 0
-    for _, _, memo in iter_session_memos():
-        memo.clear()
-        n += 1
+    """Drop every memoized value; returns how many entries it dropped."""
+    n = len(_MEMO)
+    _MEMO.clear()
     return n

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.scalar import dec, hex_hash64, strip_filename, wildcard_hive
+from ..memos import memo
 from ..plans.registry import register
 from ..session import defer_unpersist, table
 
@@ -1801,7 +1802,7 @@ def _copurchase_pair_supports(
 
 
 # Co-purchase basket/pair-support memo, per (session, corpus) — r18
-# (guide §2.4 "remove shuffles outright", the _SHINGLE_MEMO pattern):
+# (guide §2.4 "remove shuffles outright", the dedup._hashed_shingles pattern):
 # FIVE registered queries (copurchase_pairs, association_rules_lift,
 # copurchase_node_jaccard, ppr_copurchase_parts and the LPA family via
 # _lpa_frames) each re-ran the identical basket-grain shuffle of
@@ -1809,35 +1810,27 @@ def _copurchase_pair_supports(
 # epilogues. Production materializes the co-purchase edge list once
 # per corpus snapshot and serves every graph/recommendation query from
 # it. localCheckpoint-backed so bench.py's per-query clearCache leaves
-# it intact; MEMO_EVENTS-labeled (cop_build / cop_hit) so BENCH_DETAIL
+# it intact; memo-labeled (cop_build / cop_hit) so BENCH_DETAIL
 # attributes the one build; scale_bench clears it so exponents still
 # price the full derive.
-_COPURCHASE_MEMO: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _copurchase_frames(spark: SparkSession, sf_dir: str):
     """(baskets, half-pair supports) for the co-purchase family:
     ``baskets`` is the order-grain sorted-distinct part-set frame
     (consumed by association_rules_lift's item supports/basket count),
     ``pe`` the unordered pair supports (pa, pb, w) every graph consumer
-    starts from. Memoized — see _COPURCHASE_MEMO."""
-    from . import dedup as _dedup
+    starts from. Memoized — see the block comment above."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _COPURCHASE_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("cop_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("cop_build")
-    li = table(spark, sf_dir, "lineitem")
-    baskets = _basket_part_sets(
-        li.select("l_orderkey", "l_partkey")
-    ).localCheckpoint(eager=True)
-    pe = _pair_supports_from_baskets(baskets, "pa", "pb", "w").localCheckpoint(
-        eager=True
-    )
-    _COPURCHASE_MEMO[key] = (baskets, pe)
-    return _COPURCHASE_MEMO[key]
+    def build() -> tuple[DataFrame, DataFrame]:
+        li = table(spark, sf_dir, "lineitem")
+        baskets = _basket_part_sets(
+            li.select("l_orderkey", "l_partkey")
+        ).localCheckpoint(eager=True)
+        pe = _pair_supports_from_baskets(
+            baskets, "pa", "pb", "w"
+        ).localCheckpoint(eager=True)
+        return baskets, pe
+
+    return memo(spark, "cop", (sf_dir,), build)
 
 
 def _mirror_pairs(
@@ -1894,7 +1887,7 @@ def copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the same bounded-bucket argument as the LSH band joins); support
     counting is a map-side-combined groupBy and only pair aggregates
     reach the final top-k window."""
-    # r18: shared memoized pair supports (see _COPURCHASE_MEMO) —
+    # r18: shared memoized pair supports (see _copurchase_frames) —
     # identical values to the per-query derive this replaces.
     _, pe = _copurchase_frames(spark, sf_dir)
     pairs = pe.select(
@@ -1986,7 +1979,7 @@ def association_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # part appears once per basket set), pair support the map-side
     # pair expansion. The items-distinct + self-join plan this
     # replaces paid 4 exchanges and a join for the pairs alone. Both
-    # frames come from the shared memo (see _COPURCHASE_MEMO).
+    # frames come from the shared memo (see _copurchase_frames).
     baskets, pe = _copurchase_frames(spark, sf_dir)
     n_baskets = baskets.count()
     isup = (
@@ -2136,51 +2129,42 @@ def label_propagation_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # LPA edge frame + converged labels, memoized per (session, corpus)
-# like dedup._PAIRS_MEMO (localCheckpoint-backed so bench.py's
+# like dedup._verified_pairs (localCheckpoint-backed so bench.py's
 # clearCache doesn't drop them): the community listing and the
 # modularity audit both consume the same {LPA_ROUNDS}-round result —
-# one loop, two readers. Events land in dedup.MEMO_EVENTS so
+# one loop, two readers. Events land in memos.MEMO_EVENTS so
 # BENCH_DETAIL attributes the build to whichever query ran first.
-_LPA_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _lpa_frames(spark: SparkSession, sf_dir: str):
     """(both-direction weighted edge frame, converged LPA labels) for
     the co-purchase graph — shared by the community listing and the
     modularity audit (identical rounds, one implementation;
-    memoized, see _LPA_MEMO)."""
-    from . import dedup as _dedup
+    memoized, see the block comment above)."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LPA_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("lpa_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("lpa_build")
-    # r18: shared memoized pair supports (see _COPURCHASE_MEMO).
-    _, pe = _copurchase_frames(spark, sf_dir)
-    eu = _mirror_pairs(pe, "pa", "pb", "src", "dst", ("w",))
-    # r18 (guide §2.2 "fewer, larger partitions" cuts both ways —
-    # here the checkpoint inherited AQE's coalescing of the small pair
-    # aggregate, just 10 partitions feeding a 32-core box, so every
-    # round's join + two aggregates ran 3x under-parallel; and §2.3
-    # "aggregate before you shuffle" — clustering by src lets the later
-    # rounds' vote aggregates combine map-side). One src-hash exchange
-    # before the checkpoint fixes both: 3-rep A/B at sf0.1 in fresh
-    # sessions measured rounds 15.1-17.5 s → 5.1-9.3 s (median
-    # 15.1 → 6.4), labels identical. NOTE localCheckpoint does NOT
-    # preserve partitioning info (probed: the LogicalRDD reports
-    # UnknownPartitioning and downstream aggregates still plan their
-    # exchange), so this is a data-layout/parallelism win, not exchange
-    # elision. At cluster scale the src exchange is edge-grain work the
-    # rounds' own shuffles already pay, and sizing a checkpointed
-    # frame's partitions to the executor parallelism rather than to
-    # AQE's advisory size is exactly the §2.2 sizing rule.
-    eu = eu.repartition("src")
-    eu = eu.localCheckpoint(eager=True)  # root of every round's DAG
-    labels = _lpa_label_rounds(eu)
-    _LPA_MEMO[key] = (eu, labels)
-    return _LPA_MEMO[key]
+    def build():
+        # r18: shared memoized pair supports (see _copurchase_frames).
+        _, pe = _copurchase_frames(spark, sf_dir)
+        eu = _mirror_pairs(pe, "pa", "pb", "src", "dst", ("w",))
+        # r18 (guide §2.2 "fewer, larger partitions" cuts both ways —
+        # here the checkpoint inherited AQE's coalescing of the small pair
+        # aggregate, just 10 partitions feeding a 32-core box, so every
+        # round's join + two aggregates ran 3x under-parallel; and §2.3
+        # "aggregate before you shuffle" — clustering by src lets the later
+        # rounds' vote aggregates combine map-side). One src-hash exchange
+        # before the checkpoint fixes both: 3-rep A/B at sf0.1 in fresh
+        # sessions measured rounds 15.1-17.5 s → 5.1-9.3 s (median
+        # 15.1 → 6.4), labels identical. NOTE localCheckpoint does NOT
+        # preserve partitioning info (probed: the LogicalRDD reports
+        # UnknownPartitioning and downstream aggregates still plan their
+        # exchange), so this is a data-layout/parallelism win, not exchange
+        # elision. At cluster scale the src exchange is edge-grain work the
+        # rounds' own shuffles already pay, and sizing a checkpointed
+        # frame's partitions to the executor parallelism rather than to
+        # AQE's advisory size is exactly the §2.2 sizing rule.
+        eu = eu.repartition("src")
+        eu = eu.localCheckpoint(eager=True)  # root of every round's DAG
+        return eu, _lpa_label_rounds(eu)
+
+    return memo(spark, "lpa", (sf_dir,), build)
 
 
 def _lpa_label_rounds(eu: DataFrame) -> DataFrame:
@@ -2498,7 +2482,7 @@ def copurchase_node_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     to pair grain; degrees broadcast back; the global top-k is
     TakeOrdered (per-partition heap), with the rank window over the
     {NODEJ_TOP}-row result only."""
-    # r18: shared memoized pair supports (see _COPURCHASE_MEMO).
+    # r18: shared memoized pair supports (see _copurchase_frames).
     _, pe0 = _copurchase_frames(spark, sf_dir)
     pe = pe0.filter(F.col("w") >= NODEJ_SUPPORT)
     eu = _mirror_pairs(pe, "pa", "pb", "src", "dst")
@@ -5160,7 +5144,7 @@ def ppr_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = table(spark, sf_dir, "part")
     # r18: edge build via the shared aggregate-then-expand builder
     # (guide §2.3/§2.4 — see _copurchase_pair_supports), served from
-    # the session memo (_COPURCHASE_MEMO) like every family member.
+    # the session memo (_copurchase_frames) like every family member.
     _, pe = _copurchase_frames(spark, sf_dir)
     half = pe.select(
         F.col("pa").alias("src"), F.col("pb").alias("dst"), "w"

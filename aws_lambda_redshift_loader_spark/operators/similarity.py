@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..memos import memo
 from ..plans.registry import register
 from ..session import table
 
@@ -767,32 +768,24 @@ def _cell_component_sums(assigned: DataFrame) -> DataFrame:
 # it to every index/search job, so per-query retraining was pure
 # repeated work (guide §1.2 step 1 — don't compute things twice). The
 # memoized value is the (cell_ids, centroid_matrix) driver-side pair
-# (IVF_CELLS x DIM ints — KB-sized, the _PPJ_STATS "ANALYZE statistic"
-# pattern, NOT a result cache: every consumer still computes its own
-# assignment/probe/search from the parquet corpus). MEMO_EVENTS-labeled
-# so BENCH_DETAIL attributes the one build; scale_bench clears it so
-# exponents still price full training.
-_KMEANS_MEMO: dict[tuple[str, str, int], tuple] = {}
-
-
+# (IVF_CELLS x DIM ints — KB-sized, the dedup._ppjoin_raw_density
+# "ANALYZE statistic" pattern, NOT a result cache: every consumer still
+# computes its own assignment/probe/search from the parquet corpus).
+# Memo-labeled so BENCH_DETAIL attributes the one build; scale_bench
+# clears it so exponents still price full training.
 def _trained_centroids(spark: SparkSession, sf_dir: str, iters: int):
     """Session-memoized `_kmeans_centroids` over the full embedding
-    corpus (see _KMEANS_MEMO). Prefix-trained variants
+    corpus (see the block comment above). Prefix-trained variants
     (stream_queries._ivf_geometry / _ivf_range_geometry) keep calling
     the raw trainer — their training sets differ by construction."""
-    from . import dedup as _dedup
 
-    key = (spark.sparkContext.applicationId, sf_dir, iters)
-    cached = _KMEANS_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("kmeans_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("kmeans_build")
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _quantize("embedding").alias("e")
-    )
-    _KMEANS_MEMO[key] = _kmeans_centroids(spark, emb, iters)
-    return _KMEANS_MEMO[key]
+    def build():
+        emb = table(spark, sf_dir, "embeddings").select(
+            "vec_id", _quantize("embedding").alias("e")
+        )
+        return _kmeans_centroids(spark, emb, iters)
+
+    return memo(spark, "kmeans", (sf_dir, iters), build)
 
 
 def _kmeans_centroids(spark: SparkSession, emb: DataFrame, iters: int):
@@ -4157,27 +4150,17 @@ def embedding_graph_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The memoized frame is the localCheckpointed symmetrized edge list the
 # queries checkpointed anyway (so bench.py's clearCache leaves it
 # intact); both searches still run their own beam rounds from parquet.
-_GANN_EDGES_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _gann_base_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import dedup as _dedup
+    def build() -> DataFrame:
+        emb = table(spark, sf_dir, "embeddings").select(
+            "vec_id", _quantize("embedding").alias("e")
+        )
+        ids, cent = _trained_centroids(spark, sf_dir, IVF_TRAIN_ITERS)
+        return _gann_edges(
+            _probe_assign(emb, ids, cent, GANN_BUILD_PROBE)
+        ).localCheckpoint(eager=True)
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _GANN_EDGES_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("gann_edges_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("gann_edges_build")
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _quantize("embedding").alias("e")
-    )
-    ids, cent = _trained_centroids(spark, sf_dir, IVF_TRAIN_ITERS)
-    edges = _gann_edges(
-        _probe_assign(emb, ids, cent, GANN_BUILD_PROBE)
-    ).localCheckpoint(eager=True)
-    _GANN_EDGES_MEMO[key] = edges
-    return edges
+    return memo(spark, "gann_edges", (sf_dir,), build)
 
 
 def _gann_search(emb: DataFrame, edges: DataFrame) -> DataFrame:
@@ -4419,7 +4402,7 @@ def embedding_graph_ann_hier_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     ids, cent = _trained_centroids(spark, sf_dir, IVF_TRAIN_ITERS)
     # Base graph shared with embedding_graph_ann_topk (r18, see
-    # _GANN_EDGES_MEMO); the sparse upper graph stays per-query.
+    # _gann_base_edges); the sparse upper graph stays per-query.
     edges = _gann_base_edges(spark, sf_dir)
     upper = emb.filter(F.col("vec_id") % GANN_UPPER_MOD == 0)
     uedges = _gann_edges(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.scalar import codes_sql, hex_hash64, norm_text, rolling_hash_sql
+from ..memos import memo
 from ..plans.registry import register
 from ..session import defer_unpersist, table
 
@@ -864,35 +865,18 @@ FROM per_doc, tot
 # and three the NB-linear frame; without the memo every one re-pays the
 # token-keyed vocab shuffle. Same contract as dedup's pair-graph memo:
 # localCheckpoint-backed (survives bench.py's clearCache), keyed on
-# (applicationId, sf_dir), build/hit labeled in dedup.MEMO_EVENTS so
+# (applicationId, sf_dir), build/hit labeled in memos.MEMO_EVENTS so
 # bench rows stay interpretable, and CLEARED by the scale instruments
-# so exponents measure full costs.
-_SURP_MEMO: dict[tuple[str, str], DataFrame] = {}
-_NB_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _scorer_memo(
-    spark: SparkSession, sf_dir: str, memo: dict, label: str, build
-) -> DataFrame:
-    from ..operators.dedup import MEMO_EVENTS
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = memo.get(key)
-    if cached is not None:
-        MEMO_EVENTS.append(f"{label}_hit")
-        return cached
-    MEMO_EVENTS.append(f"{label}_build")
-    out = build().localCheckpoint(eager=True)
-    memo[key] = out
-    return out
-
-
+# so exponents measure full costs. The DSIR scores share the contract.
 def _doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc (doc_id, n_tokens, surprisal_q, mean_surprisal_q) — the
-    unigram-surprisal scorer frame, memoized per session (see
-    _SURP_MEMO)."""
-    return _scorer_memo(
-        spark, sf_dir, _SURP_MEMO, "surprisal", lambda: _doc_surprisal_plan(spark, sf_dir)
+    unigram-surprisal scorer frame, memoized per session (see the block
+    comment above)."""
+    return memo(
+        spark,
+        "surprisal",
+        (sf_dir,),
+        lambda: _doc_surprisal_plan(spark, sf_dir).localCheckpoint(eager=True),
     )
 
 
@@ -2199,16 +2183,16 @@ def _registry_queries():
     return QUERIES
 
 
-_DSIR_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_grams, score_q) — the DSIR importance scores before
     the top-K selection; shared by the exact window form and the
     approximate-threshold scalable form. Memoized per session like the
-    other scorer frames (_scorer_memo contract)."""
-    return _scorer_memo(
-        spark, sf_dir, _DSIR_MEMO, "dsir_scorer", lambda: _dsir_scored_plan(spark, sf_dir)
+    other scorer frames (see _doc_surprisal)."""
+    return memo(
+        spark,
+        "dsir_scorer",
+        (sf_dir,),
+        lambda: _dsir_scored_plan(spark, sf_dir).localCheckpoint(eager=True),
     )
 
 
@@ -2418,9 +2402,13 @@ def quality_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _nb_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc (doc_id, score) under the learned naive-Bayes linear
-    scorer (see _nb_scored_plan); memoized per session (_NB_MEMO)."""
-    return _scorer_memo(
-        spark, sf_dir, _NB_MEMO, "nb_scorer", lambda: _nb_scored_plan(spark, sf_dir)
+    scorer (see _nb_scored_plan); memoized per session like
+    _doc_surprisal."""
+    return memo(
+        spark,
+        "nb_scorer",
+        (sf_dir,),
+        lambda: _nb_scored_plan(spark, sf_dir).localCheckpoint(eager=True),
     )
 
 

@@ -14,7 +14,7 @@ pending batch is checked against three flush thresholds
 
 On flush: CAS `open→locked` (index.js:693-757, loser exits quietly), a
 fresh `currentBatch = uuid4` is rotated onto the config (index.js:768-803),
-the locked batch is loaded (sinks.load_batch) and moved to
+the locked batch is loaded (pipeline._load → sinks.fan_out) and moved to
 `complete`/`error` (closeBatch index.js:1409-1489 / failBatch 1327-1403).
 
 Spark disposition: batch *contents* are file references, not rows — the

@@ -162,11 +162,3 @@ class StreamIngest:
             q.awaitTermination()
         finally:
             q.stop()
-
-    def lineage(self) -> DataFrame:
-        """Per-sink audit of which source file each row came from —
-        the manifest (S6) recomputed from data instead of stored:
-        `input_file_name()` over the sink table."""
-        sink = self.config.sinks[0]
-        df = self.spark.read.parquet(os.path.join(sink.path, sink.target_table))
-        return df.select(F.input_file_name().alias("sink_file")).distinct()

@@ -7,7 +7,8 @@ tumbling-window stream shares its DuckDB oracle with the batch query —
 complete-mode output over a finite source equals the batch answer.
 
 The ingestion-side streaming machinery (tri-threshold batcher, ledger,
-replay) lives in streaming.batcher / .ledger / .replay.
+replay) lives in streaming.batcher / .ledger and
+pipeline.IngestPipeline.reprocess_batch / .replay_failures.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalar import dec
+from ..memos import memo
 from ..plans.registry import register
 from ..session import defer_unpersist, normalize_nanos, run_concurrently, tune
 
@@ -140,9 +142,13 @@ def warm_stream_shapes(spark: SparkSession) -> None:
     spark.catalog.dropTempView("alrs_warm_stream_result")
 
 
-def _run_stream(spark: SparkSession, sf_dir: str, agg_builder) -> DataFrame:
+def _run_stream(
+    spark: SparkSession, sf_dir: str, builder, mode: str = "complete"
+) -> DataFrame:
     """Run a finite streaming query over events.parquet to completion via a
-    memory sink (complete mode), return the result table."""
+    memory sink, return the result table. ``mode`` is the output mode:
+    "complete" for aggregates that hold a result table, "append" for
+    stream-stream joins and other operators that emit incrementally."""
     tune(spark)
     # Raw on-disk schema (ts arrives as int64 nanos under nanosAsLong);
     # normalize_nanos converts it exactly like the batch path.
@@ -159,8 +165,8 @@ def _run_stream(spark: SparkSession, sf_dir: str, agg_builder) -> DataFrame:
     name = f"stream_result_{next(_COUNTER)}"
     with _stream_shuffle(spark):
         q = (
-            agg_builder(stream)
-            .writeStream.outputMode("complete")
+            builder(stream)
+            .writeStream.outputMode(mode)
             .format("memory")
             .queryName(name)
             .start()
@@ -353,20 +359,6 @@ def stream_stateful_batcher(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql import types as T
 
-    tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_nanos(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    files = stream.select(
-        F.col("event_type").alias("s3Prefix"),
-        F.col("event_id").alias("file_id"),
-        F.col("ts"),
-        F.floor(F.col("value") * 100).cast("bigint").alias("size"),
-    )
-
     out_schema = T.StructType(
         [
             T.StructField("s3Prefix", T.StringType()),
@@ -398,23 +390,18 @@ def stream_stateful_batcher(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((seq, pending_n, pending_bytes))
         yield pd.DataFrame(closed, columns=["s3Prefix", "batch_seq", "n_files", "batch_bytes"])
 
-    name = f"stream_result_{next(_COUNTER)}"
-    with _stream_shuffle(spark):
-        q = (
-            files.groupBy("s3Prefix")
-            .applyInPandasWithState(
-                fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+    def batches(stream: DataFrame) -> DataFrame:
+        files = stream.select(
+            F.col("event_type").alias("s3Prefix"),
+            F.col("event_id").alias("file_id"),
+            F.col("ts"),
+            F.floor(F.col("value") * 100).cast("bigint").alias("size"),
         )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+        return files.groupBy("s3Prefix").applyInPandasWithState(
+            fold, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        )
+
+    return _run_stream(spark, sf_dir, batches, "append")
 
 
 @register(
@@ -507,35 +494,7 @@ def stream_funnel_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _run_stream_append(spark, sf_dir, agg)
-
-
-def _run_stream_append(spark: SparkSession, sf_dir: str, builder) -> DataFrame:
-    """Like _run_stream but append-mode (stream-stream joins and other
-    operators that emit incrementally rather than holding a result
-    table)."""
-    tune(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_nanos(
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(sf_dir)
-    )
-    name = f"stream_result_{next(_COUNTER)}"
-    with _stream_shuffle(spark):
-        q = (
-            builder(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return _run_stream(spark, sf_dir, agg, "append")
 
 
 @register(
@@ -1469,11 +1428,10 @@ def ingest_neardup_epoch(
 # whenever its write task finished, so order-dependent stores (packing,
 # the gram drift prefixes, the transition seams) rely on splits that
 # set explicit ascending mtimes (the doc, embedding-segment and
-# event-ts splits). Build/hit events land in dedup.MEMO_EVENTS as
+# event-ts splits). Build/hit events land in memos.MEMO_EVENTS as
 # "<source>_stream_build" / "<source>_stream_hit", so BENCH_DETAIL
 # attributes each build to whichever consumer ran first; scale
 # instruments clear the memo so exponents measure full builds.
-_SOURCE_STREAM_MEMO: dict[tuple[str, str, str], dict[str, object]] = {}
 
 # 4 concurrent store jobs fill each other's scheduling tails without
 # fighting for executor cores; each source submits its long pole first
@@ -1488,8 +1446,10 @@ def _drain(spark: SparkSession, src: str, bodies: list, ckpt: str) -> None:
     session.run_concurrently, so pool threads inherit the epoch's job
     group and ``q.stop()`` cancels their in-flight jobs too; a body that
     raises fails the epoch and the stream, and a rerun on the same
-    ``ckpt`` replays from the last committed epoch. The one stream
-    runner of the store section."""
+    ``ckpt`` replays from the last committed epoch. A query stopped
+    from outside before the split is drained raises too, so a cancelled
+    build publishes nothing. The one stream runner of the store
+    section."""
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("pathGlobFilter", "part-*")
@@ -1512,6 +1472,10 @@ def _drain(spark: SparkSession, src: str, bodies: list, ckpt: str) -> None:
         )
     try:
         q.processAllAvailable()
+        # processAllAvailable returns quietly when another thread stops
+        # the query mid-split.
+        if not q.isActive:
+            raise RuntimeError(f"stream over {src} was stopped before it drained")
     finally:
         q.stop()
 
@@ -1528,17 +1492,12 @@ def _ensure_source_stream(
     """The store map of ``source``'s ingest stream (see the block
     comment), built on first use per (session, corpus) by the source's
     entry in ``_SOURCES``. A build that raises publishes nothing."""
-    from ..operators import dedup as _dedup
 
-    key = (spark.sparkContext.applicationId, sf_dir, source)
-    cached = _SOURCE_STREAM_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append(f"{source}_stream_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append(f"{source}_stream_build")
-    tune(spark)
-    _SOURCE_STREAM_MEMO[key] = _SOURCES[source](spark, sf_dir)
-    return _SOURCE_STREAM_MEMO[key]
+    def build() -> dict[str, object]:
+        tune(spark)
+        return _SOURCES[source](spark, sf_dir)
+
+    return memo(spark, f"{source}_stream", (sf_dir,), build)
 
 
 def _docs_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
@@ -2962,9 +2921,6 @@ def ingest_drift_epoch(
 # (session, fixture, epoch count): the doc stream's simulated arrival
 # order, also read directly by the replay tests. The source dir is
 # consumed read-only, so sharing is safe.
-_SPLIT_MEMO: dict[tuple[str, str, int], str] = {}
-
-
 def _ensure_doc_split(spark: SparkSession, sf_dir: str, n: int) -> str:
     """Ascending-doc_id-range split of the documents corpus with
     STRICTLY INCREASING mtimes, so a maxFilesPerTrigger=1 stream
@@ -2976,27 +2932,21 @@ def _ensure_doc_split(spark: SparkSession, sf_dir: str, n: int) -> str:
     import glob
     import os
 
-    from ..operators import dedup as _dedup
+    def build() -> str:
+        src = _e2e_tmpdir("alrs_docsplit_")
+        # lang rides along for the bodies that group by it (KMV, packing);
+        # the doc_id/text-only bodies project it away, so parquet projection
+        # never reads it for them.
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+            "doc_id", "lang", "text"
+        )
+        docs.repartitionByRange(n, "doc_id").write.mode("overwrite").parquet(src)
+        base = 1_600_000_000
+        for k, f in enumerate(sorted(glob.glob(f"{src}/part-*.parquet"))):
+            os.utime(f, (base + k, base + k))
+        return src
 
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    cached = _SPLIT_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("doc_split_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("doc_split_build")
-    src = _e2e_tmpdir("alrs_docsplit_")
-    # lang rides along for the bodies that group by it (KMV, packing);
-    # the doc_id/text-only bodies project it away, so parquet projection
-    # never reads it for them.
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "lang", "text"
-    )
-    docs.repartitionByRange(n, "doc_id").write.mode("overwrite").parquet(src)
-    base = 1_600_000_000
-    for k, f in enumerate(sorted(glob.glob(f"{src}/part-*.parquet"))):
-        os.utime(f, (base + k, base + k))
-    _SPLIT_MEMO[key] = src
-    return src
+    return memo(spark, "doc_split", (sf_dir, n), build)
 
 
 def _doc_nchars_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
@@ -3743,9 +3693,6 @@ def ingest_gram_epoch(
     )
 
 
-_EMBSEG_MEMO: dict[tuple[str, str], str] = {}
-
-
 def _ensure_emb_segment_split(spark: SparkSession, sf_dir: str) -> str:
     """Deterministic id-segment split of the embedding corpus: one
     parquet file per segment (segment = vec_id div ceil((max_id + 1) /
@@ -3764,50 +3711,47 @@ def _ensure_emb_segment_split(spark: SparkSession, sf_dir: str) -> str:
 
     from ..operators.similarity import _quantize
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EMBSEG_MEMO.get(key)
-    if cached is not None:
-        return cached
+    def build() -> str:
+        tune(spark)
+        staging = _e2e_tmpdir("alrs_embseg_stage_")
+        src = _e2e_tmpdir("alrs_embseg_src_")
 
-    tune(spark)
-    staging = _e2e_tmpdir("alrs_embseg_stage_")
-    src = _e2e_tmpdir("alrs_embseg_src_")
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            "vec_id", _quantize("embedding").alias("e")
+        )
+        mx = emb.agg(F.max("vec_id").alias("m")).collect()[0]["m"]
+        w = math.ceil((int(mx) + 1) / INC_GRAM_EPOCHS)
+        (
+            emb.withColumn("seg", F.floor(F.col("vec_id") / w).cast("int"))
+            .repartition(INC_GRAM_EPOCHS, "seg")
+            .write.mode("overwrite")
+            .partitionBy("seg")
+            .parquet(staging)
+        )
+        # Flatten to one file per segment with strictly increasing mtimes:
+        # FileStreamSource orders by timestamp, so epoch k ingests exactly
+        # id-segment k (partitionBy + repartition on seg puts each segment
+        # in one task => one file per segment dir).
+        base = 1_600_000_000
+        empty_src: str | None = None
+        for k in range(INC_GRAM_EPOCHS):
+            fs = glob.glob(f"{staging}/seg={k}/part-*.parquet")
+            dst = f"{src}/part-{k:05d}.parquet"
+            if len(fs) == 1:
+                shutil.move(fs[0], dst)
+            else:
+                # Sparse vec_ids can leave a segment EMPTY — emit an empty
+                # epoch k to keep epoch == segment (see gram block comment).
+                assert not fs, f"segment {k}: expected at most one file, got {fs}"
+                if empty_src is None:
+                    edir = _e2e_tmpdir("alrs_embseg_empty_")
+                    emb.limit(0).coalesce(1).write.mode("overwrite").parquet(edir)
+                    empty_src = glob.glob(f"{edir}/part-*.parquet")[0]
+                shutil.copy(empty_src, dst)
+            os.utime(dst, (base + k, base + k))
+        return src
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", _quantize("embedding").alias("e")
-    )
-    mx = emb.agg(F.max("vec_id").alias("m")).collect()[0]["m"]
-    w = math.ceil((int(mx) + 1) / INC_GRAM_EPOCHS)
-    (
-        emb.withColumn("seg", F.floor(F.col("vec_id") / w).cast("int"))
-        .repartition(INC_GRAM_EPOCHS, "seg")
-        .write.mode("overwrite")
-        .partitionBy("seg")
-        .parquet(staging)
-    )
-    # Flatten to one file per segment with strictly increasing mtimes:
-    # FileStreamSource orders by timestamp, so epoch k ingests exactly
-    # id-segment k (partitionBy + repartition on seg puts each segment
-    # in one task => one file per segment dir).
-    base = 1_600_000_000
-    empty_src: str | None = None
-    for k in range(INC_GRAM_EPOCHS):
-        fs = glob.glob(f"{staging}/seg={k}/part-*.parquet")
-        dst = f"{src}/part-{k:05d}.parquet"
-        if len(fs) == 1:
-            shutil.move(fs[0], dst)
-        else:
-            # Sparse vec_ids can leave a segment EMPTY — emit an empty
-            # epoch k to keep epoch == segment (see gram block comment).
-            assert not fs, f"segment {k}: expected at most one file, got {fs}"
-            if empty_src is None:
-                edir = _e2e_tmpdir("alrs_embseg_empty_")
-                emb.limit(0).coalesce(1).write.mode("overwrite").parquet(edir)
-                empty_src = glob.glob(f"{edir}/part-*.parquet")[0]
-            shutil.copy(empty_src, dst)
-        os.utime(dst, (base + k, base + k))
-    _EMBSEG_MEMO[key] = src
-    return src
+    return memo(spark, "emb_segment_split", (sf_dir,), build)
 
 
 def _register_incremental_gram() -> None:
@@ -4731,29 +4675,21 @@ _register_incremental_er()
 # oracle.
 INC_RULES_EPOCHS = 4
 
-_BASKETSPLIT_MEMO: dict[tuple[str, str], str] = {}
-
-
 def _ensure_basket_split(spark: SparkSession, sf_dir: str) -> str:
     """l_orderkey-range split of lineitem's (basket, item) projection —
     whole baskets per file, so every epoch's pair delta is complete."""
-    from ..operators import dedup as _dedup
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BASKETSPLIT_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("basket_split_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("basket_split_build")
-    src = _e2e_tmpdir("alrs_basketsplit_")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    li.repartitionByRange(INC_RULES_EPOCHS, "l_orderkey").write.mode(
-        "overwrite"
-    ).parquet(src)
-    _BASKETSPLIT_MEMO[key] = src
-    return src
+    def build() -> str:
+        src = _e2e_tmpdir("alrs_basketsplit_")
+        li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+            "l_orderkey", "l_partkey"
+        )
+        li.repartitionByRange(INC_RULES_EPOCHS, "l_orderkey").write.mode(
+            "overwrite"
+        ).parquet(src)
+        return src
+
+    return memo(spark, "basket_split", (sf_dir,), build)
 
 
 def ingest_rules_epoch(
@@ -5001,9 +4937,6 @@ def _register_incremental_gann_hier() -> None:
 _register_incremental_gann_hier()
 
 
-_STORE_LPA_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _ensure_store_lpa(spark: SparkSession, sf_dir: str):
     """(both-direction weighted edge frame, read-time LPA labels)
     resolved from the assoc-rules store's pair-support sums — the
@@ -5013,34 +4946,26 @@ def _ensure_store_lpa(spark: SparkSession, sf_dir: str):
     the batch pair splits _lpa_frames. Memoized per (session, corpus);
     the underlying ingest is _baskets_stream (shared further with
     stream_incremental_assoc_rules)."""
-    from ..operators import dedup as _dedup
-    from ..operators.relational import _lpa_label_rounds
+    from ..operators.relational import _lpa_label_rounds, _mirror_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _STORE_LPA_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("store_lpa_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("store_lpa_build")
-    store = _ensure_source_stream(spark, sf_dir, "baskets")["rules"]
-    pe = (
-        spark.read.parquet(store)
-        .filter(F.col("kind") == 0)
-        .groupBy(F.col("ka").alias("part_a"), F.col("kb").alias("part_b"))
-        .agg(F.sum("c").cast("bigint").alias("w"))
-    )
-    from ..operators.relational import _mirror_pairs
+    def build():
+        store = _ensure_source_stream(spark, sf_dir, "baskets")["rules"]
+        pe = (
+            spark.read.parquet(store)
+            .filter(F.col("kind") == 0)
+            .groupBy(F.col("ka").alias("part_a"), F.col("kb").alias("part_b"))
+            .agg(F.sum("c").cast("bigint").alias("w"))
+        )
+        eu = _mirror_pairs(pe, "part_a", "part_b", "src", "dst", ("w",))
+        # r18: src-partitioned checkpoint — every LPA round's aggregates
+        # reuse this one exchange (see _lpa_frames for the A/B numbers and
+        # the scale argument; identical edge algebra here, fed from the
+        # rules store's resolved pair sums instead of the batch baskets).
+        eu = eu.repartition("src")
+        eu = eu.localCheckpoint(eager=True)  # root of every round's DAG
+        return eu, _lpa_label_rounds(eu)
 
-    eu = _mirror_pairs(pe, "part_a", "part_b", "src", "dst", ("w",))
-    # r18: src-partitioned checkpoint — every LPA round's aggregates
-    # reuse this one exchange (see _lpa_frames for the A/B numbers and
-    # the scale argument; identical edge algebra here, fed from the
-    # rules store's resolved pair sums instead of the batch baskets).
-    eu = eu.repartition("src")
-    eu = eu.localCheckpoint(eager=True)  # root of every round's DAG
-    labels = _lpa_label_rounds(eu)
-    _STORE_LPA_MEMO[key] = (eu, labels)
-    return _STORE_LPA_MEMO[key]
+    return memo(spark, "store_lpa", (sf_dir,), build)
 
 
 def _register_stream_community_modularity() -> None:
@@ -5403,32 +5328,24 @@ def _emb_segment_stream(spark: SparkSession, sf_dir: str) -> dict[str, object]:
 # (sum-merge: rules/token; this: min/max-merge at user grain).
 INC_KM_EPOCHS = 4
 
-_EVSPLIT_MEMO: dict[tuple[str, str, int], str] = {}
-
-
 def _ensure_event_split(spark: SparkSession, sf_dir: str, n: int) -> str:
     """ts-range split of the event stream (arrival order — users span
     epochs freely; the min-merge algebra doesn't care). Memoized."""
-    from ..operators import dedup as _dedup
 
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    cached = _EVSPLIT_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("event_split_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("event_split_build")
-    src = _e2e_tmpdir("alrs_evsplit_")
-    ev = normalize_nanos(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    ).select(
-        "user_id",
-        "event_type",
-        "value",
-        F.to_date("ts").alias("day"),
-    )
-    ev.repartitionByRange(n, "day").write.mode("overwrite").parquet(src)
-    _EVSPLIT_MEMO[key] = src
-    return src
+    def build() -> str:
+        src = _e2e_tmpdir("alrs_evsplit_")
+        ev = normalize_nanos(
+            spark.read.parquet(f"{sf_dir}/events.parquet")
+        ).select(
+            "user_id",
+            "event_type",
+            "value",
+            F.to_date("ts").alias("day"),
+        )
+        ev.repartitionByRange(n, "day").write.mode("overwrite").parquet(src)
+        return src
+
+    return memo(spark, "event_split", (sf_dir, n), build)
 
 
 def ingest_km_epoch(
@@ -5657,9 +5574,6 @@ def _register_stream_transitions() -> None:
 _register_stream_transitions()
 
 
-_EVTSSPLIT_MEMO: dict[tuple[str, str, int], str] = {}
-
-
 def _ensure_event_ts_split(spark: SparkSession, sf_dir: str, n: int) -> str:
     """ts-range split of the RAW event stream (user_id, event_id,
     event_type, µs ts) in strict arrival order: one file per range,
@@ -5671,67 +5585,61 @@ def _ensure_event_ts_split(spark: SparkSession, sf_dir: str, n: int) -> str:
     import os
     import shutil
 
-    from ..operators import dedup as _dedup
+    def build() -> str:
+        staging = _e2e_tmpdir("alrs_evtstage_")
+        src = _e2e_tmpdir("alrs_evtsplit_")
+        # `value` rides along for the hull-store body (the transition body
+        # never reads it).
+        ev = normalize_nanos(
+            spark.read.parquet(f"{sf_dir}/events.parquet")
+        ).select("user_id", "event_id", "event_type", "value", "ts")
+        # Range-bucket by ts THEN write one file per bucket with increasing
+        # mtimes (repartitionByRange alone gives no file-order guarantee to
+        # the FileStreamSource, which orders by timestamp).
+        from pyspark.sql.window import Window as W
 
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    cached = _EVTSSPLIT_MEMO.get(key)
-    if cached is not None:
-        _dedup.MEMO_EVENTS.append("event_ts_split_hit")
-        return cached
-    _dedup.MEMO_EVENTS.append("event_ts_split_build")
-    staging = _e2e_tmpdir("alrs_evtstage_")
-    src = _e2e_tmpdir("alrs_evtsplit_")
-    # `value` rides along for the hull-store body (the transition body
-    # never reads it).
-    ev = normalize_nanos(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    ).select("user_id", "event_id", "event_type", "value", "ts")
-    # Range-bucket by ts THEN write one file per bucket with increasing
-    # mtimes (repartitionByRange alone gives no file-order guarantee to
-    # the FileStreamSource, which orders by timestamp).
-    from pyspark.sql.window import Window as W
-
-    bounds = list(
-        ev.select(
-            F.percentile_approx(
-                "ts", [i / n for i in range(1, n)], 10000
-            ).alias("b")
-        ).collect()[0]["b"]
-    )
-    # Heavy ts duplication can return the same quantile bound twice,
-    # which would leave a ts range empty (no seg=k dir). Dedupe the
-    # bounds — fewer, non-empty segments preserve the seam invariant
-    # (strict ts ranges in arrival order), which is what the stitch
-    # readers rely on, not an exact epoch count.
-    bounds = sorted(set(bounds))
-    bucket = F.lit(0)
-    for b in bounds:
-        bucket = bucket + F.when(F.col("ts") >= F.lit(b), 1).otherwise(0)
-    (
-        ev.withColumn("seg", bucket.cast("int"))
-        .repartition(len(bounds) + 1, "seg")
-        .write.mode("overwrite")
-        .partitionBy("seg")
-        .parquet(staging)
-    )
-    segs = sorted(
-        int(p.rsplit("seg=", 1)[1])
-        for p in glob.glob(f"{staging}/seg=*")
-    )
-    if not segs:
-        raise RuntimeError(
-            f"event ts-split produced no segments under {staging}; "
-            "the events table appears to be empty"
+        bounds = list(
+            ev.select(
+                F.percentile_approx(
+                    "ts", [i / n for i in range(1, n)], 10000
+                ).alias("b")
+            ).collect()[0]["b"]
         )
-    base = 1_600_000_000
-    for k, seg in enumerate(segs):
-        fs = glob.glob(f"{staging}/seg={seg}/part-*.parquet")
-        assert len(fs) == 1, f"segment {seg}: expected one file, got {fs}"
-        dst = f"{src}/part-{k:05d}.parquet"
-        shutil.move(fs[0], dst)
-        os.utime(dst, (base + k, base + k))
-    _EVTSSPLIT_MEMO[key] = src
-    return src
+        # Heavy ts duplication can return the same quantile bound twice,
+        # which would leave a ts range empty (no seg=k dir). Dedupe the
+        # bounds — fewer, non-empty segments preserve the seam invariant
+        # (strict ts ranges in arrival order), which is what the stitch
+        # readers rely on, not an exact epoch count.
+        bounds = sorted(set(bounds))
+        bucket = F.lit(0)
+        for b in bounds:
+            bucket = bucket + F.when(F.col("ts") >= F.lit(b), 1).otherwise(0)
+        (
+            ev.withColumn("seg", bucket.cast("int"))
+            .repartition(len(bounds) + 1, "seg")
+            .write.mode("overwrite")
+            .partitionBy("seg")
+            .parquet(staging)
+        )
+        segs = sorted(
+            int(p.rsplit("seg=", 1)[1])
+            for p in glob.glob(f"{staging}/seg=*")
+        )
+        if not segs:
+            raise RuntimeError(
+                f"event ts-split produced no segments under {staging}; "
+                "the events table appears to be empty"
+            )
+        base = 1_600_000_000
+        for k, seg in enumerate(segs):
+            fs = glob.glob(f"{staging}/seg={seg}/part-*.parquet")
+            assert len(fs) == 1, f"segment {seg}: expected one file, got {fs}"
+            dst = f"{src}/part-{k:05d}.parquet"
+            shutil.move(fs[0], dst)
+            os.utime(dst, (base + k, base + k))
+        return src
+
+    return memo(spark, "event_ts_split", (sf_dir, n), build)
 
 
 def _register_stream_logrank() -> None:

@@ -1016,9 +1016,9 @@ def run_probe() -> None:
 def run(spark, specs, sf_dir: str, name: str) -> float:
     # Scale exponents measure each query's FULL cost: clear EVERY
     # session memo (pair graphs, quantizers, splits, store ingests)
-    # before the timed run. The registry auto-discovers the memo dicts
-    # by naming convention so a newly added memo cannot silently escape
-    # clearing (tests/test_memo_registry.py locks the convention).
+    # before the timed run. Every memo lives in the one memos._MEMO
+    # dict, so one clear reaches all of them
+    # (tests/test_memo_registry.py locks that there is no other).
     from aws_lambda_redshift_loader_spark.memos import clear_session_memos
 
     clear_session_memos()

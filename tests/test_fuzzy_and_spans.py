@@ -14,6 +14,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from aws_lambda_redshift_loader_spark.memos import clear_session_memos
+
 
 def _fuzzy_pairs(spark, names):
     """Run the fuzzy operator's exact logic over an in-memory customer
@@ -205,7 +207,7 @@ def test_rolling_hash_unicode_parity(spark, tmp_path):
         b = norm(res.fetchall(), [x[0] for x in res.description])
         assert a == b, f"{name} diverged on unicode text"
         assert len(a) > 0
-    D._PAIRS_MEMO.clear()  # don't leak the tiny test corpus's pair memo
+    clear_session_memos()  # don't leak the tiny test corpus's pair memo
 
 
 def test_cc_local_and_distributed_paths_agree(spark):
@@ -246,8 +248,7 @@ def test_pair_graph_memo_builds_once(spark):
 
     sf = "/root/testdata/sf0.001"
     specs = load_all()
-    dedup._PAIRS_MEMO.clear()
-    dedup._CC_MEMO.clear()
+    clear_session_memos()
     del dedup.MEMO_EVENTS[:]
     specs["minhash_lsh_pairs"].fn(spark, sf).count()
     specs["dedup_connected_components"].fn(spark, sf).count()

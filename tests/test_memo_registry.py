@@ -1,47 +1,38 @@
-"""Locks the session-memo clearing convention (round-18 verdict item 8).
+"""Locks the one-memo design of ``memos.py``.
 
-Every cross-query session memo must be a module-level ``_*_MEMO`` dict
-in one of ``memos.MEMO_MODULES`` so that scale instruments price full
-builds: a memo added in an unlisted module, or under a non-conforming
-name, would silently survive clear_session_memos() — the r18 verdict
-flagged exactly that as the line between legitimate within-session
-sharing and gaming. No Spark session needed.
+Every cross-query session memo goes through ``memos.memo()``, whose
+single ``_MEMO`` dict is the one thing ``clear_session_memos()`` has to
+clear for scale instruments to price full builds. A module-level memo
+dict anywhere else, or an event appended outside ``memos.py``, would be
+a second cache that escapes that clear. No Spark session needed.
 """
 
 from __future__ import annotations
 
 import ast
-import importlib
 import pathlib
-import pkgutil
 import re
+from types import SimpleNamespace
+
+import pytest
 
 import aws_lambda_redshift_loader_spark as pkg
-from aws_lambda_redshift_loader_spark.memos import (
-    MEMO_MODULES,
-    clear_session_memos,
-    iter_session_memos,
-)
+from aws_lambda_redshift_loader_spark import memos
 
 _MEMO_NAME = re.compile(r"_[A-Z0-9_]*_MEMO")
 
 
-def _all_package_modules():
-    for info in pkgutil.walk_packages(pkg.__path__, prefix=pkg.__name__ + "."):
-        yield importlib.import_module(info.name)
-
-
-def _memo_assignments_in_source() -> set[tuple[str, str]]:
-    """(module, name) of every module-level ``_*_MEMO`` assignment in the
-    package's .py files, plain or annotated — read from the source, so
-    the expectation is independent of the attribute filter the registry
-    itself uses."""
+def _package_sources():
     root = pathlib.Path(pkg.__file__).parent
-    found = set()
-    for path in root.rglob("*.py"):
+    for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root.parent).with_suffix("")
-        mod = ".".join(rel.parts).removesuffix(".__init__")
-        for node in ast.parse(path.read_text()).body:
+        yield ".".join(rel.parts).removesuffix(".__init__"), ast.parse(path.read_text())
+
+
+def test_memos_module_holds_the_only_memo_dict():
+    found = set()
+    for mod, tree in _package_sources():
+        for node in tree.body:
             if isinstance(node, ast.Assign):
                 targets = node.targets
             elif isinstance(node, ast.AnnAssign):
@@ -49,54 +40,98 @@ def _memo_assignments_in_source() -> set[tuple[str, str]]:
             else:
                 continue
             for t in targets:
-                if isinstance(t, ast.Name) and _MEMO_NAME.fullmatch(t.id):
+                if isinstance(t, ast.Name) and (t.id == "_MEMO" or _MEMO_NAME.fullmatch(t.id)):
                     found.add((mod, t.id))
-    return found
+    assert found == {("aws_lambda_redshift_loader_spark.memos", "_MEMO")}
 
 
-def test_every_memo_dict_is_registered():
-    registered = {(m, n) for m, n, _ in iter_session_memos()}
-    in_source = _memo_assignments_in_source()
-    # Guard the scan itself: one memo per source stream leaves 18 in the
-    # package, 7 of them in stream_queries.
-    assert len(in_source) >= 18, sorted(in_source)
-    assert ("aws_lambda_redshift_loader_spark.streaming.stream_queries",
-            "_SOURCE_STREAM_MEMO") in in_source
-    unregistered = in_source - registered
-    assert not unregistered, f"memo dicts escaping clear: {sorted(unregistered)}"
-    # Any memo-named dict attribute OUTSIDE the registered modules must be
-    # the same object as a registered one (a re-export), else the
-    # registry misses it.
-    registered_objs = {id(d) for _, _, d in iter_session_memos()}
-    strays = set()
-    for mod in _all_package_modules():
-        if mod.__name__ in MEMO_MODULES:
-            continue
-        for name in dir(mod):
-            obj = getattr(mod, name)
+def test_memo_events_are_appended_only_in_memos_module():
+    appends = set()
+    for mod, tree in _package_sources():
+        for node in ast.walk(tree):
             if (
-                _MEMO_NAME.fullmatch(name)
-                and isinstance(obj, dict)
-                and id(obj) not in registered_objs
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "append"
+                and "MEMO_EVENTS" in ast.unparse(node.func.value)
             ):
-                strays.add((mod.__name__, name))
-    assert not strays, f"memo dicts in unregistered modules: {strays}"
+                appends.add(mod)
+    assert appends == {"aws_lambda_redshift_loader_spark.memos"}
 
 
-def test_clear_session_memos_clears_everything():
-    # Seed every registered memo with a sentinel, clear, assert empty.
-    memos = [d for _, _, d in iter_session_memos()]
-    assert len(memos) >= 18  # the inventory the scan test counts; guard the sweep
-    for d in memos:
-        d["__sentinel__"] = object()
-    n = clear_session_memos()
-    assert n == len(memos)
-    assert all(not d for d in memos)
+def _session(app_id: str):
+    return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
 
 
-def test_docstream_memo_registered():
-    # The source-stream memo (the doc stream's and every other source's)
-    # must be in the sweep (the newest memo is always the one a hand
-    # list would have missed).
-    names = {n for _, n, _ in iter_session_memos()}
-    assert "_SOURCE_STREAM_MEMO" in names
+@pytest.fixture()
+def fresh_memo(monkeypatch):
+    monkeypatch.setattr(memos, "_MEMO", {})
+    events: list[str] = []
+    monkeypatch.setattr(memos, "MEMO_EVENTS", events)
+    return events
+
+
+def test_memo_builds_once_then_hits(fresh_memo):
+    spark = _session("app-1")
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    first = memos.memo(spark, "thing", ("sf", 3), build)
+    assert memos.memo(spark, "thing", ("sf", 3), build) is first
+    assert memos.memo(spark, "thing", ("sf", 3), build) is first
+    assert len(calls) == 1
+    assert fresh_memo == ["thing_build", "thing_hit", "thing_hit"]
+    assert list(memos._MEMO) == [("app-1", "thing", "sf", 3)]
+
+
+def test_memo_logs_a_nested_build_after_its_parent(fresh_memo):
+    spark = _session("app-1")
+    memos.memo(
+        spark, "outer", ("sf",), lambda: memos.memo(spark, "inner", ("sf",), lambda: 1)
+    )
+    assert fresh_memo == ["outer_build", "inner_build"]
+
+
+def test_raising_build_publishes_nothing(fresh_memo):
+    spark = _session("app-1")
+
+    def build():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        memos.memo(spark, "thing", ("sf",), build)
+    assert memos._MEMO == {}
+    assert memos.memo(spark, "thing", ("sf",), lambda: 7) == 7
+    assert fresh_memo == ["thing_build", "thing_build"]
+
+
+def test_application_ids_do_not_share_entries(fresh_memo):
+    assert memos.memo(_session("app-1"), "thing", ("sf",), lambda: "one") == "one"
+    assert memos.memo(_session("app-2"), "thing", ("sf",), lambda: "two") == "two"
+    assert fresh_memo == ["thing_build", "thing_build"]
+
+
+def test_labels_do_not_share_entries(fresh_memo):
+    spark = _session("app-1")
+    assert memos.memo(spark, "a", ("sf",), lambda: "a") == "a"
+    assert memos.memo(spark, "b", ("sf",), lambda: "b") == "b"
+    assert fresh_memo == ["a_build", "b_build"]
+
+
+def test_clear_session_memos_clears_everything(fresh_memo):
+    spark = _session("app-1")
+    for label in ("a", "b", "c"):
+        memos.memo(spark, label, ("sf",), object)
+    assert memos.clear_session_memos() == 3
+    assert memos._MEMO == {}
+    memos.memo(spark, "a", ("sf",), object)
+    assert fresh_memo[-1] == "a_build"
+
+
+def test_dedup_reexports_the_event_log():
+    from aws_lambda_redshift_loader_spark.operators import dedup
+
+    assert dedup.MEMO_EVENTS is memos.MEMO_EVENTS

@@ -131,8 +131,8 @@ def scale_fixture():
 
 def _run(spark, fn, sf_dir: str) -> float:
     # Exponents measure each query's FULL cost: clear every session
-    # memo via the central registry (see aws_lambda_redshift_loader_spark.memos;
-    # test_memo_registry locks the naming convention it discovers by).
+    # memo, all of which live in aws_lambda_redshift_loader_spark.memos
+    # (test_memo_registry locks that there is no other memo dict).
     from aws_lambda_redshift_loader_spark.memos import clear_session_memos
 
     clear_session_memos()

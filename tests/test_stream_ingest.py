@@ -1956,6 +1956,7 @@ def test_source_stream_body_failure_publishes_nothing_and_replays(
     import pytest
     from pyspark.sql import functions as F
 
+    from aws_lambda_redshift_loader_spark import memos
     from aws_lambda_redshift_loader_spark.streaming import stream_queries as SQ
 
     src = str(tmp_path / "src")
@@ -1993,8 +1994,8 @@ def test_source_stream_body_failure_publishes_nothing_and_replays(
     monkeypatch.setitem(SQ._SOURCES, "fault", fault_source)
     with pytest.raises(Exception, match="injected store failure"):
         SQ._ensure_source_stream(spark, src, "fault")
-    key = (spark.sparkContext.applicationId, src, "fault")
-    assert key not in SQ._SOURCE_STREAM_MEMO
+    key = (spark.sparkContext.applicationId, "fault_stream", src)
+    assert key not in memos._MEMO
     assert os.path.isfile(f"{store_a}/epoch=1/_SUCCESS")
     assert not os.path.exists(f"{store_b}/epoch=1")
 
@@ -2009,3 +2010,58 @@ def test_source_stream_body_failure_publishes_nothing_and_replays(
     assert rows(store_a) == rows(clean_a)
     assert rows(store_b) == rows(clean_b)
     assert len(rows(store_a)) == 40 and len(rows(store_b)) == 4
+
+
+def test_stopping_a_source_stream_cancels_its_bodies_jobs(spark, tmp_path, monkeypatch):
+    """Two store bodies on the drain runner each run a Spark job that
+    would sleep 120 s. Once both jobs are active, another thread stops
+    the query through spark.streams.active: _drain raises within 30 s,
+    no job is left running, and _ensure_source_stream publishes no memo
+    entry."""
+    import threading
+    import time
+
+    import pytest
+
+    from aws_lambda_redshift_loader_spark import memos
+    from aws_lambda_redshift_loader_spark.streaming import stream_queries as SQ
+
+    sc = spark.sparkContext
+    src = str(tmp_path / "src")
+    spark.range(4).coalesce(1).write.parquet(src)
+
+    def sleeper(batch_df, epoch_id):
+        sc.parallelize([0], 1).foreach(lambda _: time.sleep(120))
+
+    def sleeping_source(spark_, sf_dir):
+        SQ._drain(spark_, src, [sleeper, sleeper], str(tmp_path / "ckpt"))
+        return {"store": src}
+
+    stopped_at: list[float] = []
+
+    def stop_when_both_jobs_run():
+        deadline = time.monotonic() + 90
+        while time.monotonic() < deadline:
+            if len(sc.statusTracker().getActiveJobsIds()) >= 2 and spark.streams.active:
+                stopped_at.append(time.monotonic())
+                for q in spark.streams.active:
+                    q.stop()
+                return
+            time.sleep(0.2)
+
+    monkeypatch.setitem(SQ._SOURCES, "sleeping", sleeping_source)
+    stopper = threading.Thread(target=stop_when_both_jobs_run)
+    stopper.start()
+    try:
+        with pytest.raises(Exception):
+            SQ._ensure_source_stream(spark, src, "sleeping")
+        raised_at = time.monotonic()
+    finally:
+        stopper.join()
+        sc.cancelAllJobs()
+    assert stopped_at, "the two body jobs never ran side by side"
+    assert raised_at - stopped_at[0] < 30
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    assert (spark.sparkContext.applicationId, "sleeping_stream", src) not in memos._MEMO
+    assert spark.range(3).count() == 3  # the session still runs jobs
